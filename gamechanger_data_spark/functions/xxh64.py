@@ -1,32 +1,41 @@
 """Pure-Python XXH64 — bit-parity twin of Spark's ``xxhash64`` expression
 (org.apache.spark.sql.catalyst.expressions.XxHash64, seed 42), used where
-bucket assignment must happen OUTSIDE a Spark job: the ``laketable``
-streaming sink's executor-side staging writer runs in a Python
-data-source worker with no SparkSession, yet its delta files must land
-in exactly the bucket the JVM hash would pick (a mismatch would duplicate
-keys across buckets — read() unions clean buckets without cross-bucket
-LWW).
+a key's bucket must be known WITHOUT a Spark job:
+
+- the ``laketable`` streaming sink's executor-side staging writer runs in
+  a Python data-source worker with no SparkSession, yet its delta files
+  must land in exactly the bucket the JVM hash would pick (a mismatch
+  would duplicate keys across buckets — read() unions clean buckets
+  without cross-bucket LWW);
+- ``LakeTable.lookup_key`` and ``buckets_for_keys`` route their probe
+  keys on the driver, so a point read launches only its own scan.
 
 Parity contract (pinned in tests/test_xxh64_parity.py against
-``F.xxhash64`` on randomized inputs):
+``F.xxhash64`` on randomized inputs, and in tests/test_lookup_routing.py
+against ``LakeTable._bucket_expr`` on real tables):
 
 - columns CHAIN: the running hash seeds the next column's hash;
-- integral values hash as 8-byte little-endian longs (Spark's
-  ``hashLong`` specialization equals generic XXH64 over those 8 bytes);
-- doubles hash as their IEEE-754 long bits with ``-0.0`` normalized;
+- key columns hash under their canonical type (:func:`canon_type`):
+  integral values as 8-byte little-endian longs (Spark's ``hashLong``
+  specialization equals generic XXH64 over those 8 bytes), fractional
+  values as doubles;
+- doubles hash as their IEEE-754 long bits with ``-0.0`` normalized and
+  every NaN collapsed to Java's canonical NaN (``doubleToLongBits``);
 - strings hash as their UTF-8 bytes;
 - NULL values leave the running hash unchanged;
 - the final value is a SIGNED 64-bit long (Spark semantics), and
   ``pmod(hash, n)`` is the bucket.
 
-This is the slow path by design: per-row Python hashing is reserved for
-trickle-rate streaming appends (the sink's domain); bulk replay keeps
-JVM-side ``F.xxhash64`` (sinks/table.py _bucket_expr).
+Per-row Python hashing costs microseconds per key: right for probe keys
+and trickle-rate streaming appends, while bulk writes keep JVM-side
+``F.xxhash64`` (sinks/table.py _bucket_expr).
 """
 
 from __future__ import annotations
 
 import struct
+
+from pyspark.sql import types as T
 
 _MASK = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -34,6 +43,7 @@ _P2 = 0xC2B2AE3D27D4EB4F
 _P3 = 0x165667B19E3779F9
 _P4 = 0x85EBCA77C2B2AE63
 _P5 = 0x27D4EB2F165667C5
+_JAVA_NAN_BITS = 0x7FF8000000000000  # Double.doubleToLongBits(NaN)
 
 
 def _rotl(x: int, r: int) -> int:
@@ -95,10 +105,41 @@ def xxh64(data: bytes, seed: int) -> int:
     return acc
 
 
+def canon_type(dt: T.DataType) -> T.DataType | None:
+    """Canonical hash type for a key column, or None (hash as-is).
+
+    xxhash64 is width-sensitive (hash(int 5) != hash(long 5)), so bucket
+    assignment must hash every integral key as LONG and every fractional
+    key as DOUBLE — then widening a key column (int->long, float->double,
+    the Iceberg promotions) is LAYOUT-INVARIANT: rows written before the
+    widening stay in the bucket the widened reader computes."""
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return T.LongType()
+    if isinstance(dt, (T.FloatType, T.DoubleType)):
+        return T.DoubleType()
+    return None
+
+
+def key_kind(name: str, dt: T.DataType) -> str:
+    """Twin hash kind of key column ``name`` of type ``dt``: ``"long"`` or
+    ``"double"`` under :func:`canon_type`, ``"string"`` for strings.
+    Other key types (timestamp, decimal, nested, ...) have no twin and
+    raise ``ValueError`` naming the column."""
+    ct = canon_type(dt)
+    if ct is not None:
+        return ct.typeName()
+    if isinstance(dt, T.StringType):
+        return "string"
+    raise ValueError(
+        f"key column {name!r} has type {dt.simpleString()}: the xxh64 "
+        "twin hashes only string, integral and fractional keys"
+    )
+
+
 def spark_xxhash64(values, kinds, seed: int = 42) -> int:
     """Spark ``xxhash64(*cols)`` over one row: chained per-column hashes,
-    SIGNED 64-bit result. ``kinds`` mirrors the canonical key types:
-    ``"long"`` (any integral, canon-cast), ``"double"``, or ``"string"``."""
+    SIGNED 64-bit result. ``kinds`` are the :func:`key_kind` of each
+    column: ``"long"``, ``"double"`` or ``"string"``."""
     h = seed & _MASK
     for v, kind in zip(values, kinds):
         if v is None:
@@ -109,7 +150,10 @@ def spark_xxhash64(values, kinds, seed: int = 42) -> int:
             d = float(v)
             if d == 0.0:
                 d = 0.0  # -0.0 normalizes (Spark NormalizeFloatingNumbers)
-            (bits,) = struct.unpack("<q", struct.pack("<d", d))
+            if d != d:
+                bits = _JAVA_NAN_BITS
+            else:
+                (bits,) = struct.unpack("<q", struct.pack("<d", d))
             h = xxh64(struct.pack("<q", bits), h)
         elif kind == "string":
             h = xxh64(v.encode("utf-8"), h)

@@ -101,18 +101,21 @@ def lww_salted(
     Phase 2: exchange the ≤salt_buckets survivors per key; global winner.
     The salt derives from the order columns, so it is deterministic.
 
-    Each phase's winner is a map-side-combining hash aggregate
-    (max over a struct led by the order columns — the lww_max_by kernel),
-    the two-level-aggregation skew form: the row_number phases this
-    replaces compiled to Sort + WindowGroupLimit + Sort + Window per
-    phase (four full sorts of the wide rows end to end), while the
-    aggregate form sorts nothing and pre-reduces each map task's slice
-    before either exchange. Measured on the bench events table
-    (local[32], sf1.0): 2.09s -> 1.00s noop-isolated, plan 4 Sorts ->
-    0. Winner parity with the window form holds because (order) totally
-    orders events per key (ties are bit-identical duplicates; the
-    struct comparison prefers non-null like desc_nulls_last) — the same
-    contract lww_max_by already relies on, equivalence-tested.
+    Each phase's winner is an aggregate (max over a struct led by the
+    order columns — the lww_max_by kernel), the two-level-aggregation
+    skew form: the row_number phases this replaces compiled to Sort +
+    WindowGroupLimit + Sort + Window per phase (four full sorts of the
+    wide rows end to end). A max over a struct holding strings has no
+    fixed-width aggregation buffer, so Spark plans it as a
+    SortAggregate: each phase still sorts its partition by the group
+    keys after its exchange — two sorts, the second over the survivors
+    only (plans/r08/lww_latest_salted_after.txt). Measured on the bench
+    events table (local[32], sf1.0): 2.09s -> 1.00s noop-isolated, plan
+    4 Sorts -> 2. Winner parity with the window form holds because
+    (order) totally orders events per key (ties are bit-identical
+    duplicates; the struct comparison prefers non-null like
+    desc_nulls_last) — the same contract lww_max_by already relies on,
+    equivalence-tested.
 
     ``partitions``: default None adds NO explicit repartition — the
     phase-1 aggregate's groupBy(keys, salt) already induces exactly that

@@ -193,10 +193,13 @@ def hash_anti_join_dedup(spark, sf_dir):
     # combining aggregate tags each candidate key with which side(s) it
     # appears on, the filter keeps new-only keys, and md5 runs on the
     # (small) surviving set. 0.95s -> 0.49s noop-isolated at
-    # sf1.0/local[32], identical output (the trailing distinct makes
-    # the md5-of-distinct-keys form bit-equal to the distinct-of-md5
-    # original even under a hash collision). The anti-JOIN physical
-    # form stays covered by revoke_by_absence (J3).
+    # sf1.0/local[32]. The output equals the original's except under an
+    # md5 collision: the trailing distinct makes a SAME-side collision
+    # (two new keys, one hash) harmless, but a collision ACROSS sides
+    # differs — the original drops a new key whose md5 equals an old
+    # key's md5, while this form compares the keys themselves and
+    # keeps it. The anti-JOIN physical form stays covered by
+    # revoke_by_absence (J3).
     ev = load(spark, sf_dir, "events").select(
         F.concat("event_type", "props").alias("k"),
         (F.col("event_id") < 500).alias("s"),

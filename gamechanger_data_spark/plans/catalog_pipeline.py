@@ -1305,8 +1305,12 @@ def approx_distinct_users_q(spark, sf_dir):
     exact = ev.groupBy("event_type").agg(
         exact_users.cast("long").alias("exact_users")
     )
-    return exact.join(sketches, "event_type").select(
-        "event_type",
+    # NULL-safe join: a NULL event_type is a group of its own (GROUP BY
+    # keeps it), and a plain equi-join would drop it.
+    return exact.join(
+        sketches, exact["event_type"].eqNullSafe(sketches["event_type"])
+    ).select(
+        exact["event_type"],
         "exact_users",
         (F.abs(F.col("__hll") - F.col("exact_users"))
          <= 0.05 * F.col("exact_users")).alias("hll_ok"),

@@ -71,9 +71,11 @@ from __future__ import annotations
 
 import fcntl
 import json
+import math
 import os
 import re
 import shutil
+import struct
 import time
 import uuid
 from contextlib import contextmanager
@@ -84,6 +86,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gamechanger_data_spark.functions.xxh64 import bucket_of, canon_type, key_kind
 from gamechanger_data_spark.operators.lww import lww_max_by, lww_salted, lww_window
 
 META_DIR = "_meta"
@@ -372,23 +375,17 @@ def _where_column(preds):
     return cond
 
 
-def _canon_type(dt: T.DataType) -> T.DataType | None:
-    """Canonical hash type for a key column, or None (hash as-is).
-
-    xxhash64 is width-sensitive (hash(int 5) != hash(long 5)), so bucket
-    assignment must hash every integral key as LONG and every fractional
-    key as DOUBLE — then widening a key column (int->long, float->double,
-    the Iceberg promotions) is LAYOUT-INVARIANT: rows written before the
-    widening stay in the bucket the widened reader computes."""
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return T.LongType()
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return T.DoubleType()
-    return None
+def _as_float32(v: float) -> float:
+    """``v`` as a FLOAT column stores it: rounded to float32, saturating
+    to infinity like Java's narrowing cast."""
+    try:
+        return struct.unpack("<f", struct.pack("<f", v))[0]
+    except OverflowError:
+        return math.copysign(math.inf, v)
 
 
 # Bucket-layout (key-hash) version stamped into every manifest. Version 2 =
-# canonical-type key hashing (_canon_type: integral keys hash as LONG,
+# canonical-type key hashing (canon_type: integral keys hash as LONG,
 # fractional as DOUBLE). A manifest WITHOUT the stamp whose key columns
 # hash differently under canonical types may have been written by
 # pre-canonical code: opening it for hash-dependent work would silently
@@ -552,7 +549,7 @@ class LakeTable:
             for f in T.StructType.fromJson(m["schema"]).fields
         }
         return any(
-            (ct := _canon_type(types[c])) is not None and ct != types[c]
+            (ct := canon_type(types[c])) is not None and ct != types[c]
             for c in self.key_cols
             if c in types
         )
@@ -2095,11 +2092,17 @@ class LakeTable:
         return out if include_tombstones else self._drop_tombstones(out)
 
     def lookup_key(self, **key_values) -> DataFrame:
-        """Point lookup: computes the key's bucket and reads ONLY that
-        bucket's files (1/NB of the table), then filters — the filter is
-        pushed into the parquet scan where the sorted-by-key row groups
-        let min/max stats skip pages. At 10^10 rows with NB=4096 a lookup
-        touches ~0.02% of the data before pushdown."""
+        """Point lookup: routes the key to its bucket on the driver
+        (:meth:`_route_keys`, no Spark job) and reads ONLY that bucket's
+        files (1/NB of the table), then filters — the filter is pushed
+        into the parquet scan where the sorted-by-key row groups let
+        min/max stats skip pages. At 10^10 rows with NB=4096 a lookup
+        touches ~0.02% of the data before pushdown. Building the frame
+        launches no job; collecting it runs only the scan.
+
+        A key value of the wrong Python type for its column raises
+        ``TypeError`` (an out-of-range integer ``ValueError``); ``None``
+        is accepted and matches nothing."""
         self._require_canonical_layout("lookup_key")
         missing = [c for c in self.key_cols if c not in key_values]
         if missing:
@@ -2114,19 +2117,9 @@ class LakeTable:
         schema = T.StructType.fromJson(m["schema"]) if m["schema"] else None
         if schema is None:
             raise ValueError("empty table")
-        # xxhash64 is TYPE-sensitive: the probe must carry exactly the
-        # table's key column types (a python int would infer LONG and hash
-        # into the wrong bucket for an INT key column).
-        key_fields = T.StructType([f for f in schema.fields if f.name in self.key_cols])
-        ordered = T.StructType(
-            [next(f for f in key_fields if f.name == c) for c in self.key_cols]
+        (bucket,) = self._route_keys(
+            schema, [tuple(key_values[c] for c in self.key_cols)]
         )
-        probe = self.spark.createDataFrame(
-            [tuple(key_values[c] for c in self.key_cols)], ordered
-        )
-        bucket = probe.select(
-            self._bucket_expr(schema=ordered).cast("int").alias("b")
-        ).collect()[0]["b"]
         # Key filter BELOW the base+delta resolution: LWW partitions by the
         # same key, so the predicate pushes through it — the parquet scans
         # prune row groups on the sorted key, and only the handful of
@@ -2162,6 +2155,42 @@ class LakeTable:
         if delta:
             out = lww_max_by(out, self.key_cols, self.order_cols)
         return self._drop_tombstones(out)
+
+    def _route_keys(self, schema: T.StructType, rows) -> list[int]:
+        """Bucket of each key tuple in ``rows`` (values in ``key_cols``
+        order) under the pinned spec, computed on the driver by the xxh64
+        twin of :meth:`_bucket_expr` (functions/xxh64.py) — no Spark job.
+
+        Values are checked with pyspark's createDataFrame verifier for
+        their column: a wrong Python type raises ``TypeError``, an
+        out-of-range integer ``ValueError``. A STRING key also requires a
+        ``str`` (the verifier accepts any object there). A FLOAT key value
+        is rounded to float32 first, as the column stores it, then hashed
+        under its canonical DOUBLE type."""
+        fields = {f.name: f for f in schema.fields}
+        key_fields = [fields[c] for c in self.key_cols]
+        kinds = [key_kind(f.name, f.dataType) for f in key_fields]
+        checks = [
+            T._make_type_verifier(f.dataType, f.nullable, name=f.name)
+            for f in key_fields
+        ]
+        out = []
+        for row in rows:
+            vals = list(row)
+            for j, (f, kind, check) in enumerate(zip(key_fields, kinds, checks)):
+                v = vals[j]
+                check(v)
+                if v is None:
+                    continue
+                if kind == "string" and not isinstance(v, str):
+                    raise TypeError(
+                        f"key column {f.name!r} is a string column, got "
+                        f"{v!r} of type {type(v).__name__}"
+                    )
+                if isinstance(f.dataType, T.FloatType):
+                    vals[j] = _as_float32(v)
+            out.append(bucket_of(vals, kinds, self.n_buckets))
+        return out
 
     def _one_row_df(self, vals, out_schema: T.StructType) -> DataFrame:
         """One-row result frame as ``range(1).select(<literals>)`` instead
@@ -2650,7 +2679,7 @@ class LakeTable:
         explicitly so the instance state is never mutated mid-operation.
 
         ``schema``: the frame the expression will run against. Integral
-        key columns hash as LONG and fractional as DOUBLE (_canon_type),
+        key columns hash as LONG and fractional as DOUBLE (canon_type),
         making key-type widening layout-invariant; without a schema the
         columns hash under their runtime types (safe only when they are
         already canonical — string/long keys, as in the test probes)."""
@@ -2663,7 +2692,7 @@ class LakeTable:
         cols = []
         for c in self.key_cols:
             e = F.col(c)
-            ct = _canon_type(types[c]) if c in types else None
+            ct = canon_type(types[c]) if c in types else None
             cols.append(e.cast(ct) if ct is not None else e)
         return F.pmod(F.xxhash64(*cols), F.lit(nb))
 
@@ -2679,7 +2708,7 @@ class LakeTable:
         float->double) — nothing is rewritten; old narrow files are read
         under the widened schema (the parquet reader widens natively) and
         bucket layout is unaffected because keys hash under canonical
-        types (_canon_type). Any other type change is refused loudly —
+        types (canon_type). Any other type change is refused loudly —
         silently casting a source column down to the stored type was the
         old behavior and could truncate.
 
@@ -4390,32 +4419,18 @@ class LakeTable:
         )
 
     def buckets_for_keys(self, keys: list[dict]) -> list[int]:
-        """Bucket ids for explicit key tuples — the pruning aid for
-        predicate DML on known keys (a point delete prunes to one
-        bucket). ``keys``: list of {key_col: value} dicts. Driver-side
-        O(len(keys)) with one tiny job."""
+        """Distinct sorted bucket ids for explicit key tuples — the
+        pruning aid for predicate DML on known keys (a point delete
+        prunes to one bucket). ``keys``: list of {key_col: value} dicts.
+        Driver-side O(len(keys)) Python hashing (:meth:`_route_keys`), no
+        Spark job; values are type-checked as in :meth:`lookup_key`."""
         m = self._load_manifest()
         self._pin_bucket_spec(m)
         schema = T.StructType.fromJson(m["schema"]) if m["schema"] else None
         if schema is None:
             raise ValueError("empty table")
-        key_fields = T.StructType(
-            [f for f in schema.fields if f.name in self.key_cols]
-        )
-        ordered = T.StructType(
-            [next(f for f in key_fields if f.name == c) for c in self.key_cols]
-        )
-        probe = self.spark.createDataFrame(
-            [tuple(k[c] for c in self.key_cols) for k in keys], ordered
-        )
-        rows = (
-            probe.select(
-                self._bucket_expr(schema=ordered).cast("int").alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        return sorted(r["b"] for r in rows)
+        rows = [tuple(k[c] for c in self.key_cols) for k in keys]
+        return sorted(set(self._route_keys(schema, rows)))
 
     def _dml_once(
         self, condition, assignments, batch_id: str, buckets

@@ -57,7 +57,7 @@ def list_ready_batches(
     return out
 
 
-def _uniform_batch_schema(batch_dir: str):
+def _uniform_batch_schema(spark: SparkSession, batch_dir: str):
     """Spark schema for a batch dir whose part files all carry ONE
     identical arrow schema, read driver-side from the footers (a few ms);
     None when files disagree (schema-evolution batch) or anything fails —
@@ -67,9 +67,9 @@ def _uniform_batch_schema(batch_dir: str):
     part footer just to union identical schemas — measured 0.4-0.9 s per
     3M-event batch INSIDE the replay loop (guide §2.4 remove-passes: the
     planning job disappears when the schema is supplied explicitly).
-    ``prefer_timestamp_ntz=True`` matches Spark's own parquet inference
-    default (``spark.sql.parquet.inferTimestampNTZ.enabled``), so the
-    fast path yields bit-identical types to the inference it replaces."""
+    Naive timestamps map as the session's
+    ``spark.sql.parquet.inferTimestampNTZ.enabled`` says, so the fast path
+    yields bit-identical types to the inference it replaces."""
     import glob as _glob
 
     try:
@@ -82,28 +82,36 @@ def _uniform_batch_schema(batch_dir: str):
         files = sorted(_glob.glob(os.path.join(batch_dir, "*.parquet")))
         if not files:
             return None
-        pf0 = pq.ParquetFile(files[0])
-        first = pf0.schema_arrow
-        null_cols = [f.name for f in first if pa.types.is_null(f.type)]
-        if null_cols:
-            # An all-null column is null-typed in the ARROW view but is
-            # physically stored (pyarrow: as un-annotated INT32), and
-            # Spark's own inference types it from the physical type
-            # (observed: int). Reproduce exactly for the INT32 case;
-            # anything else keeps the inference job.
-            phys = {
-                pf0.metadata.schema.column(i).name:
-                    pf0.metadata.schema.column(i).physical_type
-                for i in range(pf0.metadata.num_columns)
-            }
-            if any(phys.get(c) != "INT32" for c in null_cols):
-                return None
-        for f in files[1:]:
-            if pq.ParquetFile(f).schema_arrow != first:
-                return None
+        first = null_cols = None
+        for path in files:
+            with pq.ParquetFile(path) as pf:
+                arrow = pf.schema_arrow
+                if first is None:
+                    first = arrow
+                    null_cols = [f.name for f in first if pa.types.is_null(f.type)]
+                elif arrow != first:
+                    return None
+                if not null_cols:
+                    continue
+                # An all-null column is null-typed in the ARROW view but
+                # is physically stored (pyarrow: as un-annotated INT32),
+                # and Spark's own inference types it from the physical
+                # type (observed: int). Reproduce exactly for the INT32
+                # case; another writer's part may store it otherwise, so
+                # check every part — anything else keeps the inference job.
+                md = pf.metadata
+                phys = {
+                    md.schema.column(i).name: md.schema.column(i).physical_type
+                    for i in range(md.num_columns)
+                }
+                if any(phys.get(c) != "INT32" for c in null_cols):
+                    return None
+        prefer_ntz = spark.conf.get(
+            "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+        ).lower() == "true"
         spark_schema = from_arrow_schema(
             pa.schema([f for f in first if not pa.types.is_null(f.type)]),
-            prefer_timestamp_ntz=True,
+            prefer_timestamp_ntz=prefer_ntz,
         )
         if not null_cols:
             return spark_schema
@@ -122,7 +130,7 @@ def read_batch(spark: SparkSession, batch_dir: str) -> DataFrame:
     """Read one batch directory. ``mergeSchema`` tolerates additive columns
     appearing mid-feed (schema-evolution batches); uniform batches skip the
     inference job entirely (footer-derived explicit schema)."""
-    schema = _uniform_batch_schema(batch_dir)
+    schema = _uniform_batch_schema(spark, batch_dir)
     reader = spark.read.option("pathGlobFilter", "*.parquet")
     if schema is not None:
         return reader.schema(schema).parquet(batch_dir)

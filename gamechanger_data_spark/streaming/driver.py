@@ -152,12 +152,12 @@ def lineage_for(
     ]
     if table is not None:
         # Hash under the TABLE's CANONICAL key-column types (the same
-        # _canon_type rule LakeTable._bucket_expr applies): xxhash64 is
+        # canon_type rule LakeTable._bucket_expr applies): xxhash64 is
         # type-sensitive, so integral keys hash as LONG and fractional as
         # DOUBLE regardless of the feed's width — a long turn_idx against
         # a stored int column (or vice versa after widening) still lands
         # in the bucket merge will write.
-        from gamechanger_data_spark.sinks.table import _canon_type
+        from gamechanger_data_spark.functions.xxh64 import canon_type
 
         stored = table.schema()
         stored_types = {f.name: f.dataType for f in stored.fields} if stored else {}
@@ -165,7 +165,7 @@ def lineage_for(
         key_exprs = []
         for c in table.key_cols:
             st = stored_types.get(c, ev_types.get(c))
-            ct = _canon_type(st) if st is not None else None
+            ct = canon_type(st) if st is not None else None
             if ct is not None:
                 key_exprs.append(F.col(c).cast(ct))
             elif c in stored_types:

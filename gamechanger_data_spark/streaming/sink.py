@@ -56,7 +56,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from gamechanger_data_spark.functions.xxh64 import bucket_of
+from gamechanger_data_spark.functions.xxh64 import bucket_of, key_kind
 
 META_DIR = "_meta"
 
@@ -72,19 +72,6 @@ def _load_head(root: str) -> dict:
         v = int(f.read().strip())
     with open(os.path.join(root, META_DIR, f"v{v:08d}.json")) as f:
         return json.load(f)
-
-
-def _key_kind(dt: T.DataType) -> str:
-    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
-        return "long"  # canonical integral hash width (_canon_type)
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        return "double"
-    if isinstance(dt, T.StringType):
-        return "string"
-    raise ValueError(
-        f"laketable sink supports string/integral/fractional key "
-        f"columns, got {dt.simpleString()}"
-    )
 
 
 @dataclass
@@ -105,7 +92,7 @@ class LakeSinkWriter(DataSourceStreamArrowWriter):
         self.order_cols = tuple(m.get("order_cols") or ("ts", "event_seq"))
         self.n_buckets = int(m["n_buckets"])
         types = {f.name: f.dataType for f in state.fields}
-        self.key_kinds = tuple(_key_kind(types[c]) for c in self.key_cols)
+        self.key_kinds = tuple(key_kind(c, types[c]) for c in self.key_cols)
         # validation at STREAM START (driver side), loud and early
         in_names = set(input_schema.names)
         missing = [c for c in (*self.key_cols, *self.order_cols)

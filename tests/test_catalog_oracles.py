@@ -32,3 +32,26 @@ def test_query_matches_oracle(spark, con, name):
     ddf = con.sql(spec.sql).df()
     errs = compare(name, sdf, ddf)
     assert not errs, f"{name}: {errs}"
+
+
+def test_approx_distinct_users_keeps_null_group(spark, tmp_path):
+    """A NULL event_type is its own GROUP BY group in the oracle; the
+    query's two-aggregate join must keep it (NULL-safe join key)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    et = ev.column("event_type").to_pylist()
+    et = [None if i % 7 == 0 else v for i, v in enumerate(et)]
+    ev = ev.set_column(
+        ev.schema.get_field_index("event_type"), "event_type",
+        pa.array(et, pa.string()),
+    )
+    pq.write_table(ev, tmp_path / "events.parquet")
+    spec = _catalog()["approx_distinct_users"]
+    sdf = spec.fn(spark, str(tmp_path)).toPandas()
+    oracle = duck_con(str(tmp_path))
+    ddf = oracle.sql(spec.sql).df()
+    assert sdf["event_type"].isna().sum() == 1
+    errs = compare("approx_distinct_users", sdf, ddf)
+    assert not errs, errs

@@ -216,7 +216,7 @@ def test_read_batch_explicit_schema_matches_mergeschema(spark, tmp_path):
     root = str(tmp_path / "feed")
     write_feed(root, spec, parts_per_batch=3)
     for bid, d in list_ready_batches(root):
-        assert _uniform_batch_schema(d) is not None
+        assert _uniform_batch_schema(spark, d) is not None
         legacy = (
             spark.read.option("mergeSchema", "true")
             .option("pathGlobFilter", "*.parquet").parquet(d).schema
@@ -233,7 +233,7 @@ def test_read_batch_explicit_schema_matches_mergeschema(spark, tmp_path):
     evolved_part = sorted(_glob.glob(os.path.join(batches[2][1], "*.parquet")))[0]
     _shutil.copy(base_part, mixed / "a.parquet")
     _shutil.copy(evolved_part, mixed / "b.parquet")
-    assert _uniform_batch_schema(str(mixed)) is None
+    assert _uniform_batch_schema(spark, str(mixed)) is None
     merged = read_batch(spark, str(mixed)).schema
     legacy = (
         spark.read.option("mergeSchema", "true")
@@ -264,7 +264,99 @@ def test_read_batch_null_typed_column_matches_inference(spark, tmp_path):
         spark.read.option("mergeSchema", "true")
         .option("pathGlobFilter", "*.parquet").parquet(str(d)).schema
     )
-    fast = _uniform_batch_schema(str(d))
+    fast = _uniform_batch_schema(spark, str(d))
     assert fast == legacy  # int, not void
     assert "void" not in fast.simpleString()
     assert read_batch(spark, str(d)).schema == legacy
+
+
+def _inferred_schema(spark, d):
+    return (
+        spark.read.option("mergeSchema", "true")
+        .option("pathGlobFilter", "*.parquet").parquet(str(d)).schema
+    )
+
+
+def test_read_batch_fast_path_follows_session_ntz_conf(spark, tmp_path):
+    """Naive parquet timestamps infer as TIMESTAMP_NTZ or TIMESTAMP by the
+    session's ``spark.sql.parquet.inferTimestampNTZ.enabled``; the footer
+    fast path must read the same conf, not assume its default."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gamechanger_data_spark.sources.feed import (
+        _uniform_batch_schema,
+        read_batch,
+    )
+
+    d = tmp_path / "b"
+    d.mkdir()
+    ts = pa.array([dt.datetime(2024, 1, 1), None], pa.timestamp("us"))
+    for n in range(2):
+        pq.write_table(
+            pa.table({"a": pa.array([1, 2], pa.int64()), "t": ts}),
+            d / f"p{n}.parquet",
+        )
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(key)
+    try:
+        for value in ("false", "true"):
+            spark.conf.set(key, value)
+            legacy = _inferred_schema(spark, d)
+            assert _uniform_batch_schema(spark, str(d)) == legacy, value
+            assert read_batch(spark, str(d)).schema == legacy, value
+        spark.conf.set(key, "false")
+        assert "timestamp_ntz" not in _inferred_schema(spark, d).simpleString()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_read_batch_fast_path_checks_every_part_of_mixed_writers(
+    spark, tmp_path
+):
+    """An all-null column reads as arrow null from any writer, but its
+    physical type is the writer's choice: pyarrow stores INT32, a
+    parquet-mr part may store INT64. The arrow schemas of the two parts
+    are equal, so the fast path must check the physical type in EVERY
+    part — here inference refuses the batch (INT vs BIGINT) and read_batch
+    must not invent a schema for it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gamechanger_data_spark.sources.feed import (
+        _uniform_batch_schema,
+        read_batch,
+    )
+
+    d = tmp_path / "b"
+    d.mkdir()
+    pq.write_table(
+        pa.table({"a": pa.array([1], pa.int32()), "n": pa.nulls(1)}),
+        d / "a.parquet",
+    )
+    jvm = spark._jvm
+    msg = jvm.org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+        "message m { optional int32 a; optional int64 n (UNKNOWN); }"
+    )
+    writer = (
+        jvm.org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(
+            jvm.org.apache.hadoop.fs.Path(f"file://{d / 'b.parquet'}")
+        ).withType(msg).build()
+    )
+    row = jvm.org.apache.parquet.example.data.simple.SimpleGroupFactory(
+        msg
+    ).newGroup()
+    row.add("a", 2)
+    writer.write(row)
+    writer.close()
+    first, second = (pq.ParquetFile(d / f) for f in ("a.parquet", "b.parquet"))
+    assert first.schema_arrow == second.schema_arrow
+    assert second.metadata.schema.column(1).physical_type == "INT64"
+
+    assert _uniform_batch_schema(spark, str(d)) is None
+    with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
+        _inferred_schema(spark, d)
+    with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
+        read_batch(spark, str(d))
