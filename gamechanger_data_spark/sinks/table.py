@@ -375,9 +375,12 @@ def _where_column(preds):
     return cond
 
 
-def _as_float32(v: float) -> float:
-    """``v`` as a FLOAT column stores it: rounded to float32, saturating
-    to infinity like Java's narrowing cast."""
+def _as_stored(dtype: T.DataType, v):
+    """A probe value ``v`` as a column of ``dtype`` stores it: a FLOAT
+    rounds to float32, saturating to infinity like Java's narrowing
+    cast; other values pass through."""
+    if v is None or not isinstance(dtype, T.FloatType):
+        return v
     try:
         return struct.unpack("<f", struct.pack("<f", v))[0]
     except OverflowError:
@@ -2120,6 +2123,10 @@ class LakeTable:
         (bucket,) = self._route_keys(
             schema, [tuple(key_values[c] for c in self.key_cols)]
         )
+        # prune and filter with the probe as the column stores it (a
+        # FLOAT key holds float32), the value _route_keys hashed
+        types = {f.name: f.dataType for f in schema.fields}
+        probe = {c: _as_stored(types[c], key_values[c]) for c in self.key_cols}
         # Key filter BELOW the base+delta resolution: LWW partitions by the
         # same key, so the predicate pushes through it — the parquet scans
         # prune row groups on the sorted key, and only the handful of
@@ -2131,7 +2138,7 @@ class LakeTable:
         # still read (deltas are never pruned). After the fold autoscaler
         # range-splits a fat bucket by key, this drops a point lookup from
         # bucket-files to ~1 file before any footer is opened.
-        preds = [(c, "=", key_values[c]) for c in self.key_cols]
+        preds = [(c, "=", probe[c]) for c in self.key_cols]
         stats = self._manifest_stats(m)
         aliases = {n: tuple(o) for n, o in (m.get("renames") or {}).items()}
         base_all = m["files"].get(str(bucket), [])
@@ -2151,7 +2158,7 @@ class LakeTable:
         else:
             out = self._scan_files(m, schema, paths)
         for c in self.key_cols:
-            out = out.filter(F.col(c) == F.lit(key_values[c]))
+            out = out.filter(F.col(c) == F.lit(probe[c]))
         if delta:
             out = lww_max_by(out, self.key_cols, self.order_cols)
         return self._drop_tombstones(out)
@@ -2187,8 +2194,7 @@ class LakeTable:
                         f"key column {f.name!r} is a string column, got "
                         f"{v!r} of type {type(v).__name__}"
                     )
-                if isinstance(f.dataType, T.FloatType):
-                    vals[j] = _as_float32(v)
+                vals[j] = _as_stored(f.dataType, v)
             out.append(bucket_of(vals, kinds, self.n_buckets))
         return out
 
@@ -3916,20 +3922,23 @@ class LakeTable:
         prev = prev.select(*proj)
         keys = list(self.key_cols)
         rh = F.xxhash64(*[F.col(c) for c in cur.columns])
-        out = (
-            cur.withColumn("__rh", rh)
-            .join(
-                prev.withColumn("__rh", rh).select(*keys, "__rh"),
-                on=keys + ["__rh"],
-                how="left_anti",
-            )
-            .drop("__rh")
-        )
-        removed = (
-            prev.filter(F.col("__deleted").isNull() | ~F.col("__deleted"))
-            .join(cur.select(*keys), on=keys, how="left_anti")
-            .withColumn("__deleted", F.lit(True))
-        )
+
+        def absent_from(left, right, cols):
+            # NULL-safe anti-join on ``cols``: a NULL key part equals
+            # itself, as in merge's LWW (Spark still plans <=> as an
+            # equi-join)
+            right = right.select(*[F.col(c).alias(f"__r_{c}") for c in cols])
+            cond = [F.col(c).eqNullSafe(F.col(f"__r_{c}")) for c in cols]
+            return left.join(right, on=cond, how="left_anti")
+
+        out = absent_from(
+            cur.withColumn("__rh", rh), prev.withColumn("__rh", rh),
+            keys + ["__rh"],
+        ).drop("__rh")
+        removed = absent_from(
+            prev.filter(F.col("__deleted").isNull() | ~F.col("__deleted")),
+            cur, keys,
+        ).withColumn("__deleted", F.lit(True))
         return out.unionByName(removed, allowMissingColumns=True)
 
     def diff(self, from_version: int, to_version: int | None = None) -> DataFrame:

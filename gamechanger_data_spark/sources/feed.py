@@ -60,8 +60,10 @@ def list_ready_batches(
 def _uniform_batch_schema(spark: SparkSession, batch_dir: str):
     """Spark schema for a batch dir whose part files all carry ONE
     identical arrow schema, read driver-side from the footers (a few ms);
-    None when files disagree (schema-evolution batch) or anything fails —
-    callers then fall back to Spark's ``mergeSchema`` inference job.
+    None when files disagree (schema-evolution batch), a footer is
+    unreadable, or an Arrow type has no Spark mapping — callers then fall
+    back to Spark's ``mergeSchema`` inference job, which reports such
+    files itself. Any other error propagates.
 
     Why: ``mergeSchema=true`` schedules a whole Spark job that opens every
     part footer just to union identical schemas — measured 0.4-0.9 s per
@@ -72,58 +74,60 @@ def _uniform_batch_schema(spark: SparkSession, batch_dir: str):
     yields bit-identical types to the inference it replaces."""
     import glob as _glob
 
-    try:
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-        import pyarrow as pa
-        from pyspark.sql import types as T
-
-        files = sorted(_glob.glob(os.path.join(batch_dir, "*.parquet")))
-        if not files:
-            return None
-        first = null_cols = None
-        for path in files:
+    files = sorted(_glob.glob(os.path.join(batch_dir, "*.parquet")))
+    if not files:
+        return None
+    first = null_cols = None
+    for path in files:
+        try:
             with pq.ParquetFile(path) as pf:
-                arrow = pf.schema_arrow
-                if first is None:
-                    first = arrow
-                    null_cols = [f.name for f in first if pa.types.is_null(f.type)]
-                elif arrow != first:
-                    return None
-                if not null_cols:
-                    continue
-                # An all-null column is null-typed in the ARROW view but
-                # is physically stored (pyarrow: as un-annotated INT32),
-                # and Spark's own inference types it from the physical
-                # type (observed: int). Reproduce exactly for the INT32
-                # case; another writer's part may store it otherwise, so
-                # check every part — anything else keeps the inference job.
-                md = pf.metadata
-                phys = {
-                    md.schema.column(i).name: md.schema.column(i).physical_type
-                    for i in range(md.num_columns)
-                }
-                if any(phys.get(c) != "INT32" for c in null_cols):
-                    return None
-        prefer_ntz = spark.conf.get(
-            "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
-        ).lower() == "true"
+                arrow, md = pf.schema_arrow, pf.metadata
+        except (OSError, pa.ArrowInvalid):
+            return None
+        if first is None:
+            first = arrow
+            null_cols = [f.name for f in first if pa.types.is_null(f.type)]
+        elif arrow != first:
+            return None
+        if not null_cols:
+            continue
+        # An all-null column is null-typed in the ARROW view but is
+        # physically stored (pyarrow: as un-annotated INT32), and Spark's
+        # own inference types it from the physical type (observed: int).
+        # Reproduce exactly for the INT32 case; another writer's part may
+        # store it otherwise, so check every part — anything else keeps
+        # the inference job.
+        phys = {
+            md.schema.column(i).name: md.schema.column(i).physical_type
+            for i in range(md.num_columns)
+        }
+        if any(phys.get(c) != "INT32" for c in null_cols):
+            return None
+    prefer_ntz = spark.conf.get(
+        "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+    ).lower() == "true"
+    try:
         spark_schema = from_arrow_schema(
             pa.schema([f for f in first if not pa.types.is_null(f.type)]),
             prefer_timestamp_ntz=prefer_ntz,
         )
-        if not null_cols:
-            return spark_schema
-        out = []
-        for f in first:
-            if pa.types.is_null(f.type):
-                out.append(T.StructField(f.name, T.IntegerType(), True))
-            else:
-                out.append(spark_schema[f.name])
-        return T.StructType(out)
-    except Exception:
+    except PySparkTypeError:
         return None
+    if not null_cols:
+        return spark_schema
+    out = []
+    for f in first:
+        if pa.types.is_null(f.type):
+            out.append(T.StructField(f.name, T.IntegerType(), True))
+        else:
+            out.append(spark_schema[f.name])
+    return T.StructType(out)
 
 
 def read_batch(spark: SparkSession, batch_dir: str) -> DataFrame:

@@ -22,14 +22,17 @@ is the head at stream start (only new commits stream).
 Scale shape: ``partitions(start, end)`` is driver-side manifest JSON
 only — one input partition per bucket whose file list changed across
 the span, so a trickle commit streams one partition, never a table
-scan. Each partition is read EXECUTOR-SIDE in pure pyarrow/pandas (no
-SparkSession in a Python data-source worker): resolve each side's
-winners (base files are already LWW-resolved; MOR delta files merge by
-a stable sort on the order columns), null-safe-compare the two states
-on the key join, and emit Arrow RecordBatches. The comparison is
-equality on every declared column — the executor-side twin of
-``_snapshot_diff``'s key+xxhash64 anti-join (a hash is only an equality
-proxy; tests pin row-parity against ``diff()`` on the same spans).
+scan. Each partition is read EXECUTOR-SIDE by one pure-pyarrow kernel
+(no SparkSession and no pandas in a Python data-source worker): read
+each side under the declared schema, coalescing retired rename aliases
+as ``LakeTable._scan_files`` does; resolve its winners (base files are
+already LWW-resolved; MOR delta files merge by a stable sort on the
+order columns); pair the two sides by key in one group-by; and emit
+Arrow RecordBatches. The comparison is null-safe equality on every
+declared column — the executor-side twin of ``_snapshot_diff``'s
+key+xxhash64 anti-join (a hash is only an equality proxy; tests pin
+row-parity against ``diff()`` on the same spans). The bootstrap span
+(empty from-side) is the case where nothing pairs.
 
 ``maxVersionsPerBatch`` (Kafka ``maxOffsetsPerTrigger`` analog) caps
 how many commit versions one micro-batch spans, so a long-history
@@ -57,6 +60,7 @@ manifest chain IS the feed.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 from dataclasses import dataclass
@@ -103,7 +107,9 @@ def _load_manifest(root: str, version: int) -> dict:
     return m
 
 
-# ---------------- executor-side arrow/pandas kernel --------------------------
+# ---------------- executor-side pyarrow kernel --------------------------------
+# pyarrow is imported inside the functions: the driver-side planning
+# workers import this module too, and never need it.
 
 
 def _arrow_type(t):
@@ -124,141 +130,122 @@ def _arrow_type(t):
     }[t]
 
 
-def _read_state(root, paths, delta_paths, schema_json, keys, order):
-    """One side's resolved winners as a pandas DataFrame under the
-    declared schema (missing columns null-filled by the dataset
-    projection). Base files already hold winners; outstanding MOR
-    deltas LWW-merge via a stable sort on the order columns (exact
-    duplicate events tie with identical payloads, so last-wins is
-    exact)."""
+def _arrow_schema(schema_json):
     import pyarrow as pa
-    import pyarrow.dataset as ds
 
-    fields = [
-        pa.field(f["name"], _arrow_type(f["type"]))
-        for f in schema_json["fields"]
-    ]
-    schema = pa.schema(fields)
-    all_paths = [os.path.join(root, p) for p in paths + delta_paths]
-    if not all_paths:
-        return pa.Table.from_batches([], schema=schema).to_pandas()
-    tbl = ds.dataset(all_paths, schema=schema, format="parquet").to_table()
-    pdf = tbl.to_pandas()
-    if delta_paths:
-        pdf = (
-            pdf.sort_values(list(order), kind="mergesort")
-            .groupby(list(keys), as_index=False, dropna=False, sort=False)
-            .tail(1)
-        )
-    return pdf.reset_index(drop=True)
+    return pa.schema(
+        pa.field(f["name"], _arrow_type(f["type"])) for f in schema_json["fields"]
+    )
 
 
-def _null_safe_ne(a, b):
-    """Elementwise 'differs' with NULL == NULL (pandas eq treats NaN/NaT
-    as unequal to itself, which would report every null column as a
-    change)."""
-    both_null = a.isna() & b.isna()
-    eq = a.eq(b)
-    return ~(eq | both_null)
+def _positions(n: int):
+    import numpy as np
+    import pyarrow as pa
+
+    return pa.array(np.arange(n, dtype=np.int64))
 
 
-def _bootstrap_batches(part, out_schema):
-    """Pure-pyarrow fast path for the bootstrap span: the from-side is
-    empty and the to-side has no outstanding deltas, so the diff is
-    simply EVERY to-side base row (base files already hold LWW winners)
-    with ``change_op`` derived from the tombstone/revoke flags — no
-    join, no sort, and critically no pandas import: the first micro-
-    batch of a full-history drain fans out over every bucket at once,
-    and each of those cold Python workers paying the pandas import
-    (~0.5-1 s each, all contending for the same cores) dominated the
-    drain wall (guide §4.5 heavyweight-init; measured: 10 s -> ~3 s
-    cold read stage on the 238k-row bench drain). Yields Arrow record
-    batches directly under the declared output schema."""
+def _read_side(part, files, deltas, schema):
+    """One side of the span: its resolved winners as an Arrow table under
+    the declared ``schema``. Files written before a rename carry the old
+    column name, so each retired alias is read as well and the column is
+    ``coalesce(new, alias...)``, as ``LakeTable._scan_files`` does;
+    never-written columns null-fill. Base files already hold winners;
+    outstanding MOR deltas resolve by a stable sort on the order columns
+    and the last position per key (exact duplicate events tie with
+    identical payloads, so last-wins is exact)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    read_fields = [
-        pa.field(f["name"], _arrow_type(f["type"]))
-        for f in part.schema_json["fields"]
-    ]
-    read_schema = pa.schema(read_fields)
-    paths = [os.path.join(part.root, p) for p in part.to_files]
+    paths = [os.path.join(part.root, p) for p in files + deltas]
     if not paths:
-        return
-    false = pa.scalar(False)
-    for batch in ds.dataset(paths, schema=read_schema,
-                            format="parquet").to_batches():
-        if batch.num_rows == 0:
-            continue
-        tbl = pa.Table.from_batches([batch])
-        names = set(tbl.column_names)
-        dead = (
-            pc.coalesce(tbl["__deleted"], false)
-            if "__deleted" in names else pa.array([False] * len(tbl))
+        return schema.empty_table()
+    aliases = {f.name: part.renames.get(f.name, []) for f in schema}
+    read_schema = pa.schema(list(schema) + [
+        pa.field(a, f.type) for f in schema for a in aliases[f.name]
+    ])
+    tbl = ds.dataset(paths, schema=read_schema, format="parquet").to_table()
+    tbl = pa.Table.from_arrays([
+        pc.coalesce(tbl[f.name], *[tbl[a] for a in aliases[f.name]])
+        if aliases[f.name] else tbl[f.name]
+        for f in schema
+    ], schema=schema)
+    if deltas:
+        tbl = tbl.take(pc.sort_indices(tbl, [(c, "ascending") for c in part.order]))
+        last = (
+            tbl.select(list(part.keys))
+            .append_column("__pos", _positions(len(tbl)))
+            .group_by(list(part.keys))
+            .aggregate([("__pos", "max")])
         )
-        op = pc.if_else(dead, pa.scalar("delete"), pa.scalar("upsert"))
-        if "is_revoked" in names:
-            rev = pc.and_not(pc.coalesce(tbl["is_revoked"], false), dead)
-            op = pc.if_else(rev, pa.scalar("revoke"), op)
-        cols = [
-            tbl[f.name] if f.name != "change_op" else op
-            for f in out_schema
-        ]
-        yield from pa.Table.from_arrays(cols, schema=out_schema).to_batches()
+        tbl = tbl.take(last["__pos_max"])
+    return tbl
 
 
-def _bucket_diff(part):
-    """The per-bucket snapshot diff, executor-side: to-rows whose state
-    is absent from the from-state (any declared column differs, null-
-    safe), plus synthesized deletes for from-live keys the to-state
-    physically dropped. Returns a pandas DataFrame in declared-schema
-    order + change_op."""
-    import pandas as pd
+def _same(a, b):
+    """Elementwise null-safe equality: NULL equals NULL, and NaN equals
+    NaN (as the row hash of ``_snapshot_diff`` sees it)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    eq = pc.equal(a, b)
+    if pa.types.is_floating(a.type):
+        eq = pc.or_kleene(eq, pc.and_kleene(pc.is_nan(a), pc.is_nan(b)))
+    return pc.if_else(pc.is_null(a), pc.is_null(b), pc.fill_null(eq, False))
+
+
+def _diff_batches(part, out_schema):
+    """The per-partition snapshot diff, executor-side in pure pyarrow:
+    to-rows whose key is new or whose row differs in any declared column
+    (null-safe), plus synthesized deletes for keys the from-side held
+    live and the to-side physically dropped. The two sides pair by key
+    in ONE group-by over both key sets (max position per side), so a
+    NULL key part pairs with itself as in merge's LWW; an empty from-side
+    (the bootstrap span) is just the case where nothing pairs. Yields
+    Arrow record batches under ``out_schema`` with ``change_op`` derived
+    from the tombstone and revoke flags, as ``changelog()`` does."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
     keys = list(part.keys)
-    cur = _read_state(part.root, part.to_files, part.to_deltas,
-                      part.schema_json, part.keys, part.order)
-    prev = _read_state(part.root, part.from_files, part.from_deltas,
-                       part.from_schema_json or part.schema_json,
-                       part.keys, part.order)
-    # project prev onto the declared columns: renamed columns map
-    # through the to-side alias list, never-written columns null-fill
-    renames = part.renames or {}
-    for c in cur.columns:
-        if c not in prev.columns:
-            src = next((a for a in renames.get(c, []) if a in prev.columns), None)
-            prev[c] = prev[src] if src is not None else None
-    prev = prev[list(cur.columns)]
-
-    value_cols = [c for c in cur.columns if c not in keys]
-    j = cur.merge(prev, on=keys, how="left", suffixes=("", "__p"),
-                  indicator="__cdc_m")
-    changed = j["__cdc_m"] == "left_only"
-    for c in value_cols:
-        changed |= _null_safe_ne(j[c], j[c + "__p"])
-    out = j.loc[changed, list(cur.columns)].copy()
-
-    live_prev = prev
-    if "__deleted" in prev.columns:
-        live_prev = prev[prev["__deleted"].isna() | ~prev["__deleted"].astype("boolean").fillna(False)]
-    rm = live_prev.merge(cur[keys], on=keys, how="left", indicator="__cdc_m")
-    rm = rm.loc[rm["__cdc_m"] == "left_only", list(cur.columns)].copy()
-    if len(rm):
-        rm["__deleted"] = True
-    out = pd.concat([out, rm], ignore_index=True) if len(rm) else out
-
-    op = pd.Series("upsert", index=out.index, dtype="object")
-    if "__deleted" in out.columns:
-        op = op.mask(out["__deleted"].astype("boolean").fillna(False), "delete")
-        out = out.drop(columns=["__deleted"])
-    if "is_revoked" in out.columns:
-        dead = op == "delete"
-        op = op.mask(
-            out["is_revoked"].astype("boolean").fillna(False) & ~dead, "revoke"
-        )
-    out["change_op"] = op
-    return out
+    schema = _arrow_schema(part.schema_json)
+    cur = _read_side(part, part.to_files, part.to_deltas, schema)
+    prev = _read_side(part, part.from_files, part.from_deltas, schema)
+    pairs = pa.concat_tables([
+        cur.select(keys)
+        .append_column("__c", _positions(len(cur)))
+        .append_column("__p", pa.nulls(len(cur), pa.int64())),
+        prev.select(keys)
+        .append_column("__c", pa.nulls(len(prev), pa.int64()))
+        .append_column("__p", _positions(len(prev))),
+    ]).group_by(keys).aggregate([("__c", "max"), ("__p", "max")])
+    c = pairs["__c_max"].combine_chunks()
+    p = pairs["__p_max"].combine_chunks()
+    paired = pc.and_(pc.is_valid(c), pc.is_valid(p))
+    emit = [c.filter(pc.is_null(p))]
+    if pc.any(paired).as_py():  # a bootstrap span skips the compare
+        ci, pi = c.filter(paired), p.filter(paired)
+        a, b = cur.take(ci), prev.take(pi)
+        same = functools.reduce(pc.and_, [
+            _same(a[n], b[n]) for n in schema.names if n not in keys
+        ])
+        emit.append(ci.filter(pc.invert(same).combine_chunks()))
+    gone = prev.take(p.filter(pc.is_null(c)))
+    gone = gone.filter(pc.invert(pc.fill_null(gone["__deleted"], False)))
+    gone = gone.set_column(
+        gone.schema.get_field_index("__deleted"), "__deleted",
+        pa.array(np.ones(len(gone), dtype=bool)),
+    )
+    out = pa.concat_tables([cur.take(pa.concat_arrays(emit)), gone])
+    dead = pc.fill_null(out["__deleted"], False)
+    op = pc.if_else(dead, pa.scalar("delete"), pa.scalar("upsert"))
+    if "is_revoked" in schema.names:
+        rev = pc.and_not(pc.fill_null(out["is_revoked"], False), dead)
+        op = pc.if_else(rev, pa.scalar("revoke"), op)
+    cols = [op if f.name == "change_op" else out[f.name] for f in out_schema]
+    return iter(pa.Table.from_arrays(cols, schema=out_schema).to_batches())
 
 
 @dataclass
@@ -268,7 +255,6 @@ class _CDCPartition(InputPartition):
     order: tuple
     renames: dict
     schema_json: dict
-    from_schema_json: dict | None
     to_files: list
     to_deltas: list
     from_files: list
@@ -364,7 +350,6 @@ class LakeCDCStreamReader(DataSourceStreamReader):
             root=self.root, keys=self.keys, order=self.order,
             renames=mt.get("renames") or {},
             schema_json=declared,
-            from_schema_json=declared if mf.get("schema") else None,
         )
         if mf.get("n_buckets") not in (None, mt.get("n_buckets")):
             # rebucket inside the span: bucket ids are incomparable
@@ -390,26 +375,7 @@ class LakeCDCStreamReader(DataSourceStreamReader):
         ]
 
     def read(self, partition):
-        import pyarrow as pa
-
-        fields = [
-            pa.field(f["name"], _arrow_type(f["type"]))
-            for f in self._out_schema_json["fields"]
-        ]
-        schema = pa.schema(fields)
-        if not (
-            partition.from_files or partition.from_deltas or partition.to_deltas
-        ):
-            # bootstrap span (empty from-side, resolved to-side): stream
-            # the base files directly — pure pyarrow, no pandas import
-            return _bootstrap_batches(partition, schema)
-        out = _bucket_diff(partition)
-        if not len(out):
-            return iter(())
-        tbl = pa.Table.from_pandas(
-            out[[f.name for f in schema]], schema=schema, preserve_index=False
-        )
-        return iter(tbl.to_batches())
+        return _diff_batches(partition, _arrow_schema(self._out_schema_json))
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in Spark's checkpoint; manifests are immutable

@@ -1,13 +1,17 @@
 """Structured Streaming CDC-out source (``format("lakecdc")``): offsets
 are snapshot versions, micro-batches are between-snapshots diffs, rows
-computed executor-side in pyarrow/pandas. Parity oracle: the engine's
-own ``diff()`` over the same spans.
+computed executor-side by one pyarrow kernel. Parity oracle: the
+engine's own ``diff()`` over the same spans.
 
 Reference analog: consumers tailing crawler output prefixes
 (gc_crawler status tracking) — here the manifest chain is the feed.
 """
 
-import shutil
+import json
+import os
+import subprocess
+import sys
+import textwrap
 
 import pytest
 from pyspark.sql import functions as F
@@ -39,8 +43,14 @@ def table(spark, tmp_path):
     return t
 
 
-def _drain(spark, root, cp, starting=None):
-    """One availableNow pass; returns the new rows as (k, val, change_op)."""
+def _norm(rows):
+    """Row dicts as sorted item tuples, in one order that tolerates NULLs."""
+    return sorted((tuple(sorted(r.items())) for r in rows), key=repr)
+
+
+def _drain(spark, root, cp, starting=None, cols=("k", "val", "change_op")):
+    """One availableNow pass; returns the new rows as ``cols`` tuples, or
+    every column through :func:`_norm` when ``cols`` is None."""
     got = []
     r = spark.readStream.format("lakecdc").option("path", root)
     if starting is not None:
@@ -48,16 +58,29 @@ def _drain(spark, root, cp, starting=None):
     q = (
         r.load()
         .writeStream.foreachBatch(
-            lambda df, _e: got.append(
-                [(x["k"], x["val"], x["change_op"]) for x in df.collect()]
-            )
+            lambda df, _e: got.extend(x.asDict() for x in df.collect())
         )
         .trigger(availableNow=True)
         .option("checkpointLocation", cp)
         .start()
     )
     q.awaitTermination(180)
-    return sorted(r for b in got for r in b)
+    if cols is None:
+        return _norm(got)
+    return sorted(tuple(x[c] for c in cols) for x in got)
+
+
+def _diff_rows(t, start, end=None):
+    return _norm(r.asDict() for r in t.diff(start, end).collect())
+
+
+def _kernel_rows(t, start, end=None):
+    """lakecdc's rows for the span ``(start, end]``, from the stream
+    reader's own ``partitions()`` and ``read()`` without a query."""
+    end = t.current_version() if end is None else end
+    r = _reader(t)
+    parts = r.partitions({"version": start}, {"version": end})
+    return _norm(row for p in parts for b in r.read(p) for row in b.to_pylist())
 
 
 def test_full_history_matches_diff(spark, tmp_path, table):
@@ -137,6 +160,152 @@ def test_rebucket_span_single_partition_correct(spark, tmp_path, table):
     inc = _drain(spark, t.root, cp)
     # the rebucket rewrite itself changes no logical row; only the merge does
     assert inc == [(4, "x4", "upsert")]
+
+
+# Extra spans over the fixture table: (commits before the span, commits
+# inside it), each commit as (rows, merge mode). Every span must stream
+# exactly diff() over it, and the full history after it too.
+SPANS = {
+    "null_flips": (
+        [([(30, 30, None, "upsert")], None)],
+        [([(30, 40, "now", "upsert"), (1, 40, None, "upsert")], None)],
+    ),
+    "revoke_then_unrevoke": (
+        [([(4, 30, "r4", "revoke")], None)],
+        [([(4, 40, "u4", "upsert"), (9, 40, "u9", "upsert")], None),
+         ([(8, 40, "r8", "revoke")], "mor"),
+         ([(8, 50, "u8", "upsert")], "mor")],
+    ),
+    "delete_then_reinsert": (
+        [],
+        [([(7, 30, None, "delete")], None),
+         ([(7, 40, "again", "upsert")], None)],
+    ),
+    "mor_deltas_only": (
+        [],
+        [([(11, 30, "m11", "upsert"), (12, 30, None, "delete")], "mor"),
+         ([(11, 40, "m11b", "upsert"), (40, 30, "new", "upsert")], "mor")],
+    ),
+    "high_fanout": (
+        [],
+        [([(i, 30, f"f{i}", "upsert") for i in range(20) if i % 5]
+          + [(100 + i, 30, f"n{i}", "upsert") for i in range(8)], None),
+         ([(i, 40, None, "delete") for i in range(0, 20, 5)], "mor")],
+    ),
+}
+
+
+@pytest.mark.parametrize("span", sorted(SPANS))
+def test_span_matches_diff(spark, tmp_path, table, span):
+    t = table
+    before, inside = SPANS[span]
+    for i, (rows, mode) in enumerate(before):
+        t.merge(_mk(spark, rows), f"pre{i}", mode=mode)
+    start = t.current_version()
+    for i, (rows, mode) in enumerate(inside):
+        t.merge(_mk(spark, rows), f"in{i}", mode=mode)
+    got = _drain(spark, t.root, str(tmp_path / "cp"), starting=start, cols=None)
+    assert got == _diff_rows(t, start)
+    assert got  # every span changes something
+    assert _kernel_rows(t, 0) == _diff_rows(t, 0)
+
+
+def test_rename_full_history_matches_diff_and_read(spark, tmp_path, table):
+    t = table
+    t.rename_column("val", "v2")
+    got = _drain(spark, t.root, str(tmp_path / "cp"), starting=0,
+                 cols=("k", "v2", "change_op"))
+    assert got == sorted(
+        (r["k"], r["v2"], r["change_op"])
+        for r in t.diff(0, t.current_version()).collect()
+    )
+    # every row was written before the rename; none may stream as NULL
+    assert (1, "a1", "upsert") in got
+    assert sorted((k, v) for k, v, op in got if op != "delete") == sorted(
+        (r["k"], r["v2"]) for r in t.read().collect()
+    )
+
+
+def test_rename_then_cow_merge_streams_only_merged_key(spark, tmp_path, table):
+    t = table
+    t.rename_column("val", "v2")
+    start = t.current_version()
+    t.merge(
+        spark.createDataFrame([(3, 30, "x3", "upsert")],
+                              "k int, ts long, v2 string, op string"),
+        "b2", mode="cow",
+    )
+    got = _drain(spark, t.root, str(tmp_path / "cp"), starting=start,
+                 cols=("k", "v2", "change_op"))
+    assert got == [(3, "x3", "upsert")]
+    assert _kernel_rows(t, start) == _diff_rows(t, start)
+
+
+def test_null_key_part_pairs_with_itself(spark, tmp_path):
+    """A NULL key part equals itself, as in merge's LWW: a row keyed
+    ``k=None`` that did not change is absent from diff() and lakecdc
+    when another key of its bucket is merged."""
+    register_lakecdc(spark)
+    t = LakeTable(spark, str(tmp_path / "t"), key_cols=("k",),
+                  order_cols=("ts",), n_buckets=1)
+    t.merge(_mk(spark, [(None, 10, "nk", "upsert"), (1, 10, "a", "upsert"),
+                        (2, 10, "b", "upsert")]), "b0")
+    start = t.current_version()
+    t.merge(_mk(spark, [(1, 20, "a2", "upsert")]), "b1")
+    diffed = [(r["k"], r["val"], r["change_op"])
+              for r in t.diff(start).collect()]
+    assert diffed == [(1, "a2", "upsert")]
+    assert [(r["k"], r["val"], r["change_op"])
+            for r in t.changelog().collect()] == diffed
+    assert _kernel_rows(t, start) == _diff_rows(t, start)
+    assert _kernel_rows(t, 0) == _diff_rows(t, 0)
+
+
+def test_read_imports_no_pandas(spark, tmp_path, table):
+    """The executor-side reader runs with pandas unimportable. A meta-path
+    finder blocks it: a ``sys.modules["pandas"] = None`` entry would break
+    pyarrow itself, whose pandas shim takes the entry for a module."""
+    t = table
+    t.merge(_mk(spark, [(3, 30, "x3", "upsert")]), "b2")
+    t.merge(_mk(spark, [(4, 40, None, "delete")]), "b3", mode="mor")
+    head = t.current_version()
+    spans = [(0, head), (1, head), (2, head)]
+    script = textwrap.dedent("""
+        import json, sys
+
+        class _NoPandas:
+            def find_spec(self, name, path=None, target=None):
+                if name.split(".")[0] == "pandas":
+                    raise ImportError(name + " is blocked")
+
+        sys.meta_path.insert(0, _NoPandas())
+        repo, root, schema, spans = json.loads(sys.argv[1])
+        sys.path.insert(0, repo)
+        from gamechanger_data_spark.streaming.cdc_source import (
+            LakeCDCStreamReader,
+        )
+        r = LakeCDCStreamReader({"path": root}, schema)
+        out = []
+        for s, e in spans:
+            parts = r.partitions({"version": s}, {"version": e})
+            out.append([row for p in parts for b in r.read(p)
+                        for row in b.to_pylist()])
+        assert "pandas" not in sys.modules
+        print(json.dumps(out))
+    """)
+    from gamechanger_data_spark.streaming.cdc_source import LakeCDCDataSource
+
+    schema = LakeCDCDataSource({"path": t.root}).schema().jsonValue()
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run(
+        [sys.executable, "-c", script,
+         json.dumps([repo, t.root, schema, spans])],
+        capture_output=True, text=True, timeout=300,
+    )
+    assert res.returncode == 0, res.stderr
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    for (s, e), rows in zip(spans, got):
+        assert _norm(rows) == _diff_rows(t, s, e), (s, e)
 
 
 def test_empty_table_refused(spark, tmp_path):

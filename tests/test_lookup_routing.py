@@ -122,10 +122,12 @@ def test_lookup_finds_edge_keys(mixed):
     t, _ = mixed
     hit = t.lookup_key(i=1, l=-1, f=0.0, d=0.0, s="é≈漢字🙂").collect()
     assert [r["val"] for r in hit] == ["v1"]
-    # the FLOAT key holds 0.1 rounded to float32; probe with that value
+    # the FLOAT key holds 0.1 rounded to float32; the written value and
+    # the rounded one both find it
     f32 = struct.unpack("<f", struct.pack("<f", 0.1))[0]
-    hit = t.lookup_key(i=-(2**31), l=5, f=f32, d=0.1, s="z").collect()
-    assert [r["val"] for r in hit] == ["v4"]
+    for f in (f32, 0.1):
+        hit = t.lookup_key(i=-(2**31), l=5, f=f, d=0.1, s="z").collect()
+        assert [r["val"] for r in hit] == ["v4"], f
     # -0.0 routes with 0.0, NaN with NaN
     assert [r["val"] for r in t.lookup_key(
         i=0, l=0, f=0.0, d=0.0, s="").collect()] == ["v0"]

@@ -360,3 +360,39 @@ def test_read_batch_fast_path_checks_every_part_of_mixed_writers(
         _inferred_schema(spark, d)
     with pytest.raises(Exception, match="CANNOT_MERGE_SCHEMAS"):
         read_batch(spark, str(d))
+
+
+def test_uniform_batch_schema_absorbs_only_footer_and_type_failures(
+    spark, tmp_path, monkeypatch
+):
+    """The footer fast path steps aside for an unreadable footer or an
+    Arrow type Spark cannot map; any other error inside it propagates
+    instead of silently costing every batch the inference job."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from gamechanger_data_spark.sources.feed import _uniform_batch_schema
+
+    d = tmp_path / "b"
+    d.mkdir()
+    pq.write_table(pa.table({"a": [1, 2], "allnull": pa.nulls(2)}),
+                   d / "p0.parquet")
+    assert _uniform_batch_schema(spark, str(d)) is not None
+
+    bad = tmp_path / "bad"
+    bad.mkdir()
+    (bad / "p0.parquet").write_bytes(b"not a parquet file")
+    assert _uniform_batch_schema(spark, str(bad)) is None
+
+    odd = tmp_path / "odd"
+    odd.mkdir()
+    pq.write_table(pa.table({"u": pa.array([1], pa.uint64())}),
+                   odd / "p0.parquet")
+    assert _uniform_batch_schema(spark, str(odd)) is None
+
+    def boom(_t):
+        raise AttributeError("bug in the footer loop")
+
+    monkeypatch.setattr(pa.types, "is_null", boom)
+    with pytest.raises(AttributeError, match="bug in the footer loop"):
+        _uniform_batch_schema(spark, str(d))
