@@ -87,7 +87,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gamechanger_data_spark.functions.xxh64 import bucket_of, canon_type, key_kind
-from gamechanger_data_spark.operators.lww import lww_max_by, lww_salted, lww_window
+from gamechanger_data_spark.operators.lww import lww_max_by, lww_window
 
 META_DIR = "_meta"
 VERSION_FILE = "VERSION"
@@ -411,7 +411,6 @@ class LakeTable:
         key_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
         order_cols: tuple[str, ...] = ("ts", "event_seq"),
         n_buckets: int = 32,
-        dedup_strategy: str = "window",
         merge_mode: str = "auto",
         mor_fraction: float = 0.2,
         mor_max_deltas: int = 8,
@@ -420,21 +419,7 @@ class LakeTable:
         stats_cols: tuple[str, ...] | None = None,
         codec: str | None = None,
     ):
-        """``dedup_strategy`` picks the physical LWW form used by merge:
-
-        * ``window``  — row_number over (order_cols desc) per key (sort-based;
-          ~13% faster when keys are mostly unique within a batch, the normal
-          CDC case). Requires the feed contract that (ts, event_seq) totally
-          orders events per key — under that contract ties only occur between
-          bit-identical duplicate rows, so the winner is well-defined.
-        * ``max_by``  — max(struct(order, payload)) hash aggregate with
-          map-side partial combine; bit-deterministic even on contract
-          violations and pre-reduces hot keys before the shuffle. Use for
-          adversarial/heavily-duplicated feeds.
-        * ``salted``  — explicit two-phase key-salted repartition + window;
-          for extreme single-key skew (one conversation dominating a batch).
-
-        ``merge_mode`` picks the physical write strategy per merge:
+        """``merge_mode`` picks the physical write strategy per merge:
 
         * ``cow``  — always rewrite touched buckets (round-1 behavior; best
           for dense batches where the batch is a large fraction of the
@@ -471,9 +456,6 @@ class LakeTable:
         self.key_cols = tuple(key_cols)
         self.order_cols = tuple(order_cols)
         self.n_buckets = n_buckets
-        if dedup_strategy not in ("window", "max_by", "salted"):
-            raise ValueError(f"unknown dedup_strategy {dedup_strategy!r}")
-        self.dedup_strategy = dedup_strategy
         if merge_mode not in ("cow", "mor", "auto"):
             raise ValueError(f"unknown merge_mode {merge_mode!r}")
         self.merge_mode = merge_mode
@@ -633,26 +615,9 @@ class LakeTable:
             report.update(checked_rows=0, misplaced_rows=0)
         # stamp-only manifest: byte-identical file lists, new version;
         # _commit stamps layout=LAYOUT_VERSION on every modern commit
-        tail, seg = self._carry_batches(m)
-        manifest = {
-            **{
-                k: m[k]
-                for k in ("schema", "n_buckets", "files")
-            },
-            "version": m["version"] + 1,
-            "deltas": m.get("deltas", {}),
-            "base_rows": m.get("base_rows", {}),
-            "delta_rows": m.get("delta_rows", {}),
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "maintenance",
-            "touched_buckets": [],
-            "renames": m.get("renames") or {},
-            "dropped": m.get("dropped") or [],
-        }
-        report["version"] = self._commit(manifest, expected_parent=m["version"])
+        report["version"] = self._commit(
+            self._successor(m, "maintenance", []), expected_parent=m["version"]
+        )
         report["verified"] = True
         self._legacy_layout = False
         return report
@@ -1118,6 +1083,112 @@ class LakeTable:
             pq.ParquetFile(os.path.join(self.root, p)).metadata.num_rows
             for p in relpaths
         )
+
+    def _write_buckets(
+        self, df: DataFrame, parent_version: int, buckets, kind: str = "snap",
+        sort=None,
+    ) -> tuple[dict[str, list[str]], dict[str, int]]:
+        """The one bucketed parquet write behind every data commit: write
+        the already-partitioned ``df`` (callers keep their own
+        partitioning) under a fresh provisional dir, one ``__bucket=``
+        dir per bucket, and return ``({bucket: [relpath]}, {bucket:
+        rows})`` with row counts from the written footers. Rows are
+        sorted within each bucket by ``sort`` (default: the key), so
+        parquet row-group min/max stats support key-range/point pruning
+        inside each bucket (lookup_key reads one bucket and skips row
+        groups) — the Z-order-lite for a single-key-prefix access
+        pattern. The sort leads with ``__bucket`` because Spark's planned
+        write sorts by the partition column itself whenever the input's
+        ordering does not already start with it, and that sort replaces
+        (not refines) a plain ``sortWithinPartitions(*sort)`` below it.
+        ``buckets=None`` discovers the written set (deferred-touched MOR
+        merges)."""
+        snap_dir = self._provisional_snap_dir(kind, parent_version)
+        out = df.sortWithinPartitions(
+            "__bucket", *(self.key_cols if sort is None else sort)
+        )
+        if "__z" in df.columns:
+            out = out.drop("__z")  # cluster_by's Morton sort key, never stored
+        (
+            out.write.mode("overwrite")
+            .option("compression", self.codec)
+            .partitionBy("__bucket")
+            .parquet(snap_dir)
+        )
+        files = self._snap_bucket_files(snap_dir, buckets)
+        return files, {bk: self._count_rows(fl) for bk, fl in files.items()}
+
+    def _successor(
+        self, base: dict, kind: str, touched, written=None,
+        how: str = "rewrite", batch_id: str | None = None, **fields,
+    ) -> dict:
+        """The manifest that follows ``base`` — the one place the snapshot
+        format is spelled out (Iceberg's snapshot producer: base manifest
+        plus added/removed files -> next manifest). ``written`` is a
+        :meth:`_write_buckets` result and ``how`` says how it lands:
+
+        * ``rewrite`` — its buckets' base files and row counts are
+          replaced and their delta stacks cleared (the rewrite folded
+          them);
+        * ``append`` — its files extend the buckets' delta stacks (MOR);
+        * ``replace`` — a full rewrite: it IS the table's file set, with
+          no deltas, and no retired column names survive it.
+
+        ``batch_id`` enters the applied-batch set; without one the set
+        carries over unchanged (maintenance and DDL). ``fields`` override
+        or add manifest entries verbatim: ``schema``, ``n_buckets``,
+        ``lineage``, ``commit_op``, ``renames``, ``dropped``, ``ddl``,
+        ``dml``. ``version``/``parent`` are provisional — :meth:`_commit`
+        finalizes both inside the lock."""
+        files = dict(base["files"])
+        deltas = {k: list(v) for k, v in base.get("deltas", {}).items()}
+        base_rows = dict(base.get("base_rows", {}))
+        delta_rows = dict(base.get("delta_rows", {}))
+        renames = base.get("renames") or {}
+        dropped = base.get("dropped") or []
+        wfiles, wrows = written or ({}, {})
+        if how == "replace":
+            files = wfiles
+            base_rows = {bk: n for bk, n in wrows.items() if wfiles[bk]}
+            deltas, delta_rows, renames, dropped = {}, {}, {}, []
+        for bk, fl in wfiles.items():
+            if how == "append":
+                deltas[bk] = deltas.get(bk, []) + fl
+                delta_rows[bk] = delta_rows.get(bk, 0) + wrows[bk]
+            elif how == "rewrite":
+                files[bk] = fl
+                base_rows[bk] = wrows[bk]
+                deltas[bk] = []
+                delta_rows[bk] = 0
+        tail, seg = (
+            self._carry_batches(base) if batch_id is None
+            else self._advance_batches(base, batch_id)
+        )
+        manifest = {
+            "version": base["version"] + 1,
+            "schema": base["schema"],
+            "n_buckets": base["n_buckets"],
+            "files": files,
+            "deltas": deltas,
+            "base_rows": base_rows,
+            "delta_rows": delta_rows,
+            "applied_batches": tail,
+            "batches_segment": seg,
+            # per-commit lineage only; lineage() concatenates across the
+            # manifest history (manifests are tiny and never expired)
+            "lineage": [],
+            "parent": base["version"],
+            "kind": kind,
+            # bucket ids (or "all") a concurrent merge must not overlap
+            # to rebase across this commit (see _touched_between)
+            "touched_buckets": touched,
+            # files under retired names survive a partial rewrite, so the
+            # alias and dropped-name lists ride along
+            "renames": renames,
+            "dropped": dropped,
+        }
+        manifest.update(fields)
+        return manifest
 
     def _manifest_stats(self, m: dict) -> dict:
         """The snapshot's full per-file stats map. Small tables keep it
@@ -2887,10 +2958,11 @@ class LakeTable:
 
         Physical plan: union-by-name of raw source events and the CURRENT
         rows of only the touched buckets (target rows compete as pseudo-
-        events under the same LWW order) -> ONE map-side-combining hash
-        aggregate picks the winner per key (in-batch duplicates, cross-batch
-        late arrivals, and hot-key skew all collapse in the partial-agg
-        stage) -> drop delete winners -> repartition the deduped state by
+        events under the same LWW order) -> ONE key-exchanged window
+        (``lww_window``) picks the winner per key (in-batch duplicates and
+        cross-batch late arrivals collapse together; Spark's partial
+        WindowGroupLimit pre-reduces each map task to its local top-1 per
+        key) -> drop delete winners -> repartition the deduped state by
         bucket -> rewrite touched buckets -> atomic manifest swap. One full
         shuffle of the union + one small shuffle of the deduped state;
         untouched buckets are never read or written.
@@ -3149,10 +3221,7 @@ class LakeTable:
         # ~10x (measured: 1425 MB -> ~150 MB on a 21M-event batch) and
         # moving the big sort to the pre-reduced map side. The second
         # exchange only carries final winners.
-        dedup = {"window": lww_window, "max_by": lww_max_by, "salted": lww_salted}[
-            self.dedup_strategy
-        ]
-        merged = dedup(merged_in, self.key_cols, self.order_cols)
+        merged = lww_window(merged_in, self.key_cols, self.order_cols)
         # delete winners persist as tombstones (__deleted=true), hidden by
         # read() but retained to defend the key; payload columns are kept
         # only as debugging context.
@@ -3165,37 +3234,23 @@ class LakeTable:
 
         # 3) write under a provisional snapshot dir: CoW rewrites the
         # touched buckets' base files; MOR appends per-bucket delta files.
-        snap_dir = self._provisional_snap_dir(
-            "snap" if write_mode == "cow" else "delta", m["version"]
-        )
-        # sortWithinPartitions by key: parquet row-group min/max stats then
-        # support key-range/point pruning inside each bucket (lookup_key
-        # reads one bucket and skips row groups) — the Z-order-lite for a
-        # single-key-prefix access pattern. CoW folds of large resident
-        # buckets autoscale their write parallelism (_fold_repartition);
-        # MOR delta appends carry only batch rows, so they keep the
-        # one-partition-per-bucket layout.
+        # CoW folds of large resident buckets autoscale their write
+        # parallelism (_fold_repartition); MOR delta appends carry only
+        # batch rows, so they keep the one-partition-per-bucket layout.
         if write_mode == "cow":
             npart, extra = self._fold_repartition(m, touched, max(1, len(touched)))
         else:
             npart = max(1, len(touched)) if touched is not None else self.n_buckets
             extra = []
-        (
-            self._fold_write(merged, npart, extra)
-            .sortWithinPartitions(*self.key_cols)
-            .write.mode("overwrite")
-            .option("compression", self.codec)
-            .partitionBy("__bucket")
-            .parquet(snap_dir)
+        written = self._write_buckets(
+            self._fold_write(merged, npart, extra), m["version"], touched,
+            kind="snap" if write_mode == "cow" else "delta",
         )
-
-        written = self._snap_bucket_files(snap_dir, touched)
         if touched is None:
             # deferred-touched MOR: the write's partitionBy dirs ARE the
             # touched set (a bucket with no winners wrote nothing and has
             # nothing to register)
-            touched = sorted(int(bk) for bk in written)
-        written_rows = {bk: self._count_rows(fl) for bk, fl in written.items()}
+            touched = sorted(int(bk) for bk in written[0])
 
         all_lineage = list(lineage_rows or [])
         if obs is not None:
@@ -3227,21 +3282,6 @@ class LakeTable:
         # escapes to merge()'s whole-op retry, which re-reads fresh state.
         base, expected = m, m["version"]
         for rebase_i in range(MAX_REBASE_ATTEMPTS):
-            files = dict(base["files"])
-            deltas = {k: list(v) for k, v in base.get("deltas", {}).items()}
-            base_rows = dict(base.get("base_rows", {}))
-            delta_rows = dict(base.get("delta_rows", {}))
-            for b in touched:
-                bk = str(b)
-                if write_mode == "cow":
-                    files[bk] = written[bk]
-                    base_rows[bk] = written_rows[bk]
-                    # the CoW rewrite folded any outstanding deltas in
-                    deltas[bk] = []
-                    delta_rows[bk] = 0
-                else:
-                    deltas[bk] = deltas.get(bk, []) + written[bk]
-                    delta_rows[bk] = delta_rows.get(bk, 0) + written_rows[bk]
             # schema: first attempt already evolved from the pinned base;
             # a rebase must re-union against the (possibly further evolved)
             # new current — additive union-by-name is order-insensitive, so
@@ -3259,33 +3299,18 @@ class LakeTable:
                     ),
                 )
             )
-            tail, seg = self._advance_batches(base, batch_id)
-            manifest = {
-                "version": m["version"] + 1,  # provisional; finalized in _commit
-                "schema": sch.jsonValue(),
-                "n_buckets": self.n_buckets,
-                "files": files,
-                "deltas": deltas,
-                "base_rows": base_rows,
-                "delta_rows": delta_rows,
-                "applied_batches": tail,
-                "batches_segment": seg,
-                # per-commit lineage only; lineage() concatenates across the
-                # manifest history (manifests are tiny and never expired)
-                "lineage": all_lineage,
-                "parent": expected,
-                "kind": "data",
-                # provenance stamp: sync_changelog dispatches on it
-                # (merge -> changelog apply, dml -> spec replay or full
-                # replace, overwrite -> full replace)
-                "commit_op": "merge",
-                "touched_buckets": sorted(int(b) for b in touched),
-                # partial rewrite: files under retired names survive in
-                # untouched buckets — the alias map rides along (a rename
-                # can't intervene mid-rebase: it conflicts with everything)
-                "renames": base.get("renames") or {},
-                "dropped": base.get("dropped") or [],
-            }
+            # CoW rewrites fold the touched buckets' deltas in; MOR appends
+            # to them. Renames ride along from the new base (a rename can't
+            # intervene mid-rebase: it conflicts with everything).
+            # commit_op is the provenance stamp sync_changelog dispatches
+            # on (merge -> changelog apply, dml -> spec replay or full
+            # replace, overwrite -> full replace).
+            manifest = self._successor(
+                base, "data", touched, written,
+                how="rewrite" if write_mode == "cow" else "append",
+                batch_id=batch_id, schema=sch.jsonValue(),
+                lineage=all_lineage, commit_op="merge",
+            )
             try:
                 final_v = self._commit(manifest, expected_parent=expected)
                 return {"skipped": False, "batch_id": batch_id, "version": final_v,
@@ -3437,10 +3462,8 @@ class LakeTable:
                 f"{self.n_buckets} (rebucketed mid-stream) — restart the "
                 "sink so staging re-hashes under the new spec"
             )
-        deltas = {k: list(v) for k, v in m.get("deltas", {}).items()}
-        delta_rows = dict(m.get("delta_rows", {}))
-        touched = []
-        total = 0
+        files: dict[str, list[str]] = {}
+        rows: dict[str, int] = {}
         for b, fl in sorted(staged.items(), key=lambda kv: int(kv[0])):
             fl = list(fl)
             if not fl:
@@ -3450,12 +3473,10 @@ class LakeTable:
                 raise ValueError(
                     f"staged bucket {bi} outside 0..{self.n_buckets - 1}"
                 )
-            bk = str(bi)
-            rows = self._count_rows(fl)
-            deltas[bk] = deltas.get(bk, []) + fl
-            delta_rows[bk] = delta_rows.get(bk, 0) + rows
-            touched.append(bi)
-            total += rows
+            files[str(bi)] = files.get(str(bi), []) + fl
+            rows[str(bi)] = rows.get(str(bi), 0) + self._count_rows(fl)
+        touched = [int(bk) for bk in files]
+        total = sum(rows.values())
         if not touched:
             return {"skipped": True, "batch_id": batch_id,
                     "version": m["version"], "rows": 0}
@@ -3467,29 +3488,14 @@ class LakeTable:
                 "rows_deleted": None, "rows_revoked": None,
                 "applied_at": _utcnow(),
             }]
-        tail, seg = self._advance_batches(m, batch_id)
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": m["schema"],
-            "n_buckets": self.n_buckets,
-            "files": dict(m["files"]),
-            "deltas": deltas,
-            "base_rows": dict(m.get("base_rows", {})),
-            "delta_rows": delta_rows,
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": lineage_rows,
-            "parent": m["version"],
-            "kind": "data",
-            "commit_op": "merge",
-            "touched_buckets": touched,
-            "renames": m.get("renames") or {},
-            "dropped": m.get("dropped") or [],
-        }
+        manifest = self._successor(
+            m, "data", touched, (files, rows), how="append",
+            batch_id=batch_id, lineage=lineage_rows, commit_op="merge",
+        )
         final_v = self._commit(manifest, expected_parent=m["version"])
         over = [
             b for b in touched
-            if len(deltas[str(b)]) > self.mor_max_deltas
+            if len(manifest["deltas"][str(b)]) > self.mor_max_deltas
         ]
         return {"skipped": False, "batch_id": batch_id, "version": final_v,
                 "rows": total, "touched_buckets": len(touched),
@@ -3536,45 +3542,13 @@ class LakeTable:
             "__bucket", self._bucket_expr(schema=schema).cast("int")
         )
 
-        snap_dir = self._provisional_snap_dir("snap", m["version"])
         npart, extra = self._fold_repartition(m, set(dirty), max(1, len(dirty)))
-        (
-            self._fold_write(keep, npart, extra)
-            .sortWithinPartitions(*self.key_cols)
-            .write.mode("overwrite")
-            .option("compression", self.codec)
-            .partitionBy("__bucket")
-            .parquet(snap_dir)
+        written = self._write_buckets(
+            self._fold_write(keep, npart, extra), m["version"], dirty
         )
-        files = dict(m["files"])
-        deltas = {k: list(v) for k, v in m.get("deltas", {}).items()}
-        base_rows = dict(m.get("base_rows", {}))
-        delta_rows = dict(m.get("delta_rows", {}))
-        files.update(self._snap_bucket_files(snap_dir, dirty))
-        for b in dirty:
-            bk = str(b)
-            base_rows[bk] = self._count_rows(files[bk])
-            deltas[bk] = []
-            delta_rows[bk] = 0
-        tail, seg = self._carry_batches(m)
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": m["schema"],
-            "n_buckets": self.n_buckets,
-            "files": files,
-            "deltas": deltas,
-            "base_rows": base_rows,
-            "delta_rows": delta_rows,
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": list(lineage_rows or []),
-            "parent": m["version"],
-            "kind": "maintenance",
-            "touched_buckets": dirty,
-            # partial rewrite: untouched buckets may hold retired-name files
-            "renames": m.get("renames") or {},
-            "dropped": m.get("dropped") or [],
-        }
+        manifest = self._successor(
+            m, "maintenance", dirty, written, lineage=list(lineage_rows or [])
+        )
         final_v = self._commit(manifest, expected_parent=m["version"])
         return {"skipped": False, "batch_id": batch_id, "version": final_v,
                 "compacted_buckets": len(dirty)}
@@ -3699,7 +3673,6 @@ class LakeTable:
                         except OSError:
                             pass
         npart = max(len(target), int(nbytes // tb))
-        snap_dir = self._provisional_snap_dir("snap", m["version"])
         if zorder:
             types = {f.name: f.dataType for f in schema.fields}
             bad = [
@@ -3750,48 +3723,15 @@ class LakeTable:
         else:
             part_cols = [F.col(c) for c in cols]
             sort_cols = [*cols, *self.key_cols]
-        (
-            out.repartitionByRange(npart, "__bucket", *part_cols)
-            .sortWithinPartitions(*sort_cols)
-            .drop("__z")
-            .write.mode("overwrite")
-            .option("compression", self.codec)
-            .partitionBy("__bucket")
-            .parquet(snap_dir)
+        written = self._write_buckets(
+            out.repartitionByRange(npart, "__bucket", *part_cols),
+            m["version"], target, sort=sort_cols,
         )
-        files = dict(m["files"])
-        deltas = {k: list(v) for k, v in m.get("deltas", {}).items()}
-        base_rows = dict(m.get("base_rows", {}))
-        delta_rows = dict(m.get("delta_rows", {}))
-        files.update(self._snap_bucket_files(snap_dir, target))
-        nfiles = 0
-        for b in target:
-            bk = str(b)
-            base_rows[bk] = self._count_rows(files[bk])
-            deltas[bk] = []
-            delta_rows[bk] = 0
-            nfiles += len(files[bk])
-        tail, seg = self._carry_batches(m)
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": m["schema"],
-            "n_buckets": self.n_buckets,
-            "files": files,
-            "deltas": deltas,
-            "base_rows": base_rows,
-            "delta_rows": delta_rows,
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "maintenance",
-            "touched_buckets": target,
-            "renames": m.get("renames") or {},
-            "dropped": m.get("dropped") or [],
-        }
+        manifest = self._successor(m, "maintenance", target, written)
         final_v = self._commit(manifest, expected_parent=m["version"])
         return {"skipped": False, "batch_id": batch_id, "version": final_v,
-                "clustered_buckets": len(target), "files_written": nfiles,
+                "clustered_buckets": len(target),
+                "files_written": sum(len(fl) for fl in written[0].values()),
                 "cluster_cols": list(cols)}
 
     def changelog(self, version: int | None = None) -> DataFrame:
@@ -3984,40 +3924,15 @@ class LakeTable:
         keep = live.withColumn(
             "__bucket", self._bucket_expr(new_nb, schema=sch).cast("int")
         )
-        snap_dir = self._provisional_snap_dir("snap", m["version"])
         npart, extra = self._fold_repartition(m, None, new_nb)
-        (
-            self._fold_write(keep, npart, extra)
-            .write.mode("overwrite")
-            .option("compression", self.codec)
-            .partitionBy("__bucket")
-            .parquet(snap_dir)
+        written = self._write_buckets(
+            self._fold_write(keep, npart, extra), m["version"], range(new_nb)
         )
-        files = self._snap_bucket_files(snap_dir, range(new_nb))
-        tail, seg = self._carry_batches(m)
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": m["schema"],
-            "n_buckets": new_nb,
-            "files": files,
-            # the full-rewrite read resolved and folded all deltas
-            "deltas": {},
-            "base_rows": {
-                b: self._count_rows(fl) for b, fl in files.items() if fl
-            },
-            "delta_rows": {},
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "maintenance",
-            # bucket ids under the NEW spec are incomparable with the
-            # old spec's — a rebucket conflicts with everything
-            "touched_buckets": "all",
-            # full rewrite: every surviving file carries current names
-            "renames": {},
-            "dropped": [],
-        }
+        # bucket ids under the NEW spec are incomparable with the old
+        # spec's — a rebucket conflicts with everything
+        manifest = self._successor(
+            m, "maintenance", "all", written, how="replace", n_buckets=new_nb
+        )
         final_v = self._commit(manifest, expected_parent=m["version"])
         self.n_buckets = new_nb
         # the rewrite hashed every row canonically: layout is current now
@@ -4087,26 +4002,12 @@ class LakeTable:
         # a chained rename inherits the prior aliases (files may exist
         # under every historical name)
         renames[new] = [old] + renames.pop(old, [])
-        tail, seg = self._carry_batches(m)
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": T.StructType(new_fields).jsonValue(),
-            "n_buckets": self.n_buckets,
-            "files": m["files"],
-            "deltas": m.get("deltas", {}),
-            "base_rows": m.get("base_rows", {}),
-            "delta_rows": m.get("delta_rows", {}),
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "maintenance",
-            # schema identity changes under every bucket: nothing rebases
-            # across a rename
-            "touched_buckets": "all",
-            "renames": renames,
-            "dropped": m.get("dropped") or [],
-        }
+        # schema identity changes under every bucket: nothing rebases
+        # across a rename
+        manifest = self._successor(
+            m, "maintenance", "all",
+            schema=T.StructType(new_fields).jsonValue(), renames=renames,
+        )
         final_v = self._commit(manifest, expected_parent=m["version"])
         return {"skipped": False, "version": final_v, "renamed": {old: new}}
 
@@ -4175,27 +4076,13 @@ class LakeTable:
             new_fields.append(T.StructField(name, dt, True))
             names.add(name)
             added[name] = dt.simpleString()
-        tail, seg = self._carry_batches(m)
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": T.StructType(new_fields).jsonValue(),
-            "n_buckets": self.n_buckets,
-            "files": m["files"],
-            "deltas": m.get("deltas", {}),
-            "base_rows": m.get("base_rows", {}),
-            "delta_rows": m.get("delta_rows", {}),
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "maintenance",
-            # schema identity changes under every bucket: nothing rebases
-            # across a DDL commit
-            "touched_buckets": "all",
-            "renames": renames,
-            "dropped": sorted(dropped),
-            "ddl": {"op": "add_columns", "cols": added},
-        }
+        # schema identity changes under every bucket: nothing rebases
+        # across a DDL commit
+        manifest = self._successor(
+            m, "maintenance", "all",
+            schema=T.StructType(new_fields).jsonValue(),
+            ddl={"op": "add_columns", "cols": added},
+        )
         final_v = self._commit(manifest, expected_parent=m["version"])
         return {"skipped": False, "version": final_v, "added": added}
 
@@ -4242,27 +4129,11 @@ class LakeTable:
         dropped.add(name)
         dropped.update(renames.pop(name, []))
         new_fields = [f for f in schema.fields if f.name != name]
-        tail, seg = self._carry_batches(m)
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": T.StructType(new_fields).jsonValue(),
-            "n_buckets": self.n_buckets,
-            "files": m["files"],
-            "deltas": m.get("deltas", {}),
-            "base_rows": m.get("base_rows", {}),
-            "delta_rows": m.get("delta_rows", {}),
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "maintenance",
-            # schema identity changes under every bucket: nothing rebases
-            # across a DDL commit
-            "touched_buckets": "all",
-            "renames": renames,
-            "dropped": sorted(dropped),
-            "ddl": {"op": "drop_column", "col": name},
-        }
+        manifest = self._successor(
+            m, "maintenance", "all",
+            schema=T.StructType(new_fields).jsonValue(), renames=renames,
+            dropped=sorted(dropped), ddl={"op": "drop_column", "col": name},
+        )
         final_v = self._commit(manifest, expected_parent=m["version"])
         return {"skipped": False, "version": final_v, "dropped_column": name}
 
@@ -4528,27 +4399,12 @@ class LakeTable:
                 .collect()
             )
             touched = sorted(r["b"] for r in rows)
-        tail, seg = self._advance_batches(m, batch_id)
         if not touched:
             # nothing matched: commit ONLY the batch marker (exactly-once
             # must still hold for an empty DML under replay)
-            manifest = {
-                **{k: m[k] for k in ("schema", "n_buckets", "files")},
-                "version": m["version"] + 1,
-                "deltas": m.get("deltas", {}),
-                "base_rows": m.get("base_rows", {}),
-                "delta_rows": m.get("delta_rows", {}),
-                "applied_batches": tail,
-                "batches_segment": seg,
-                "lineage": [],
-                "parent": m["version"],
-                "kind": "data",
-                "commit_op": "dml",
-                "touched_buckets": [],
-                "renames": m.get("renames") or {},
-                "dropped": m.get("dropped") or [],
-                "dml": dml_spec,
-            }
+            manifest = self._successor(
+                m, "data", [], batch_id=batch_id, commit_op="dml", dml=dml_spec
+            )
             final_v = self._commit(manifest, expected_parent=m["version"])
             return {"skipped": False, "batch_id": batch_id, "version": final_v,
                     "touched_buckets": 0, "rows_hit": 0}
@@ -4621,50 +4477,18 @@ class LakeTable:
         out = out.withColumn(
             "__bucket", self._bucket_expr(schema=schema).cast("int")
         )
-        snap_dir = self._provisional_snap_dir("snap", m["version"])
-        (
-            self._fold_write(out, npart, extra)
-            .sortWithinPartitions(*self.key_cols)
-            .write.mode("overwrite")
-            .option("compression", self.codec)
-            .partitionBy("__bucket")
-            .parquet(snap_dir)
+        files, rows = self._write_buckets(
+            self._fold_write(out, npart, extra), m["version"], touched
         )
-        files = dict(m["files"])
-        deltas = {k: list(v) for k, v in m.get("deltas", {}).items()}
-        base_rows = dict(m.get("base_rows", {}))
-        delta_rows = dict(m.get("delta_rows", {}))
-        new_by_bucket = self._snap_bucket_files(snap_dir, touched)
         for bk, kept in kept_files.items():
             # scope-skipped files stay resident; rewritten files replace
             # only the overlapping remainder of the bucket
-            new_by_bucket[bk] = kept + new_by_bucket[bk]
-        files.update(new_by_bucket)
-        for b in touched:
-            bk = str(b)
-            base_rows[bk] = self._count_rows(files[bk])
-            # the resolved rewrite folded any outstanding deltas
-            deltas[bk] = []
-            delta_rows[bk] = 0
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": m["schema"],
-            "n_buckets": self.n_buckets,
-            "files": files,
-            "deltas": deltas,
-            "base_rows": base_rows,
-            "delta_rows": delta_rows,
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "data",
-            "commit_op": "dml",
-            "touched_buckets": touched,
-            "renames": m.get("renames") or {},
-            "dropped": m.get("dropped") or [],
-            "dml": dml_spec,
-        }
+            files[bk] = kept + files[bk]
+            rows[bk] += self._count_rows(kept)
+        manifest = self._successor(
+            m, "data", touched, (files, rows), batch_id=batch_id,
+            commit_op="dml", dml=dml_spec,
+        )
         final_v = self._commit(manifest, expected_parent=m["version"])
         if obs is not None:
             rows_hit = int(obs.get["rows_hit"] or 0)
@@ -4754,37 +4578,13 @@ class LakeTable:
             ).cast("int"),
         )
 
-        snap_dir = self._provisional_snap_dir("snap", m["version"])
         npart, extra = self._fold_repartition(m, None, self.n_buckets)
-        (
-            self._fold_write(keep, npart, extra)
-            .write.mode("overwrite")
-            .option("compression", self.codec)
-            .partitionBy("__bucket")
-            .parquet(snap_dir)
+        written = self._write_buckets(
+            self._fold_write(keep, npart, extra), m["version"],
+            range(self.n_buckets),
         )
-        files = self._snap_bucket_files(snap_dir, range(self.n_buckets))
-        tail, seg = self._carry_batches(m)
-        manifest = {
-            "version": m["version"] + 1,  # provisional; finalized in _commit
-            "schema": m["schema"],
-            "n_buckets": self.n_buckets,
-            "files": files,
-            # full rewrite: all deltas folded into the new base
-            "deltas": {},
-            "base_rows": {b: self._count_rows(fl) for b, fl in files.items() if fl},
-            "delta_rows": {},
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "maintenance",
-            # drops rows in arbitrary buckets: conflicts with everything
-            "touched_buckets": "all",
-            # full rewrite: every surviving file carries current names
-            "renames": {},
-            "dropped": [],
-        }
+        # drops rows in arbitrary buckets: conflicts with everything
+        manifest = self._successor(m, "maintenance", "all", written, how="replace")
         final_v = self._commit(manifest, expected_parent=m["version"])
         self._legacy_layout = False  # full canonical rewrite
         return {"skipped": False, "batch_id": batch_id, "version": final_v}
@@ -4831,55 +4631,30 @@ class LakeTable:
                 "__bucket", self._bucket_expr(schema=state_schema).cast("int")
             )
         )
-        dedup = {"window": lww_window, "max_by": lww_max_by, "salted": lww_salted}[
-            self.dedup_strategy
-        ]
-        merged = dedup(src_part, self.key_cols, self.order_cols)
+        merged = lww_window(src_part, self.key_cols, self.order_cols)
         merged = merged.withColumn(
             "__deleted", F.coalesce(F.col("op") == F.lit("delete"), F.lit(False))
         ).drop("op")
 
-        new_version = m["version"] + 1  # provisional; finalized in _commit
         if batch_id is None:
             # unique per attempt (uuid, not just version: two racing
             # overwrites can guess the same provisional version, and the
             # conflict-loser must not be mistaken for a replay of the
             # winner when it re-runs)
-            batch_id = f"__overwrite__v{new_version}_{uuid.uuid4().hex[:8]}"
-        snap_dir = self._provisional_snap_dir("snap", m["version"])
-        (
-            merged.repartition(self.n_buckets, "__bucket")
-            .sortWithinPartitions(*self.key_cols)
-            .write.mode("overwrite")
-            .option("compression", self.codec)
-            .partitionBy("__bucket")
-            .parquet(snap_dir)
+            batch_id = f"__overwrite__v{m['version'] + 1}_{uuid.uuid4().hex[:8]}"
+        written = self._write_buckets(
+            merged.repartition(self.n_buckets, "__bucket"), m["version"],
+            range(self.n_buckets),
         )
-        files = self._snap_bucket_files(snap_dir, range(self.n_buckets))
-        tail, seg = self._advance_batches(m, batch_id)
         stored_schema = T.StructType(
             [f for f in state_schema.fields if f.name != "__bucket"]
         )
-        manifest = {
-            "version": new_version,
-            "schema": stored_schema.jsonValue(),
-            "n_buckets": self.n_buckets,
-            "files": files,
-            "deltas": {},
-            "base_rows": {b: self._count_rows(fl) for b, fl in files.items() if fl},
-            "delta_rows": {},
-            "applied_batches": tail,
-            "batches_segment": seg,
-            "lineage": [],
-            "parent": m["version"],
-            "kind": "data",
-            "commit_op": "overwrite",
-            # CREATE OR REPLACE: no concurrent commit can be rebased over it
-            "touched_buckets": "all",
-            # replacement schema is the source's: no retired names survive
-            "renames": {},
-            "dropped": [],
-        }
+        # CREATE OR REPLACE: no concurrent commit can be rebased over it,
+        # and the replacement schema is the source's
+        manifest = self._successor(
+            m, "data", "all", written, how="replace", batch_id=batch_id,
+            schema=stored_schema.jsonValue(), commit_op="overwrite",
+        )
         final_v = self._commit(manifest, expected_parent=m["version"])
         self._legacy_layout = False  # full canonical rewrite
         return {"skipped": False, "batch_id": batch_id, "version": final_v}

@@ -185,10 +185,22 @@ def _read_side(part, files, deltas, schema):
 
 def _same(a, b):
     """Elementwise null-safe equality: NULL equals NULL, and NaN equals
-    NaN (as the row hash of ``_snapshot_diff`` sees it)."""
+    NaN (as the row hash of ``_snapshot_diff`` sees it). ``pc.equal``
+    has no kernel for nested types, so an ARRAY column compares by a
+    canonical encoding of each value: JSON with sorted keys, in which a
+    NaN element encodes as ``NaN`` on both sides."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    if pa.types.is_nested(a.type):
+        a, b = (
+            pa.array(
+                [None if v is None else json.dumps(v, sort_keys=True, default=str)
+                 for v in x.to_pylist()],
+                pa.string(),
+            )
+            for x in (a, b)
+        )
     eq = pc.equal(a, b)
     if pa.types.is_floating(a.type):
         eq = pc.or_kleene(eq, pc.and_kleene(pc.is_nan(a), pc.is_nan(b)))

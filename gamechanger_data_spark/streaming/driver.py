@@ -3,7 +3,7 @@
 One batch body (the Spark restatement of the reference's ingest step DAG,
 dataPipelines/gc_ingest/pipelines/core/cli.py:77-120):
 
-    events -> normalize text (native expr chain / Arrow UDF)
+    events -> normalize text (native expression chain)
            -> dedup_hash = sha256(normalized text)
            -> per-partition lineage metrics (offset range + op counts)
            -> LakeTable.merge (LWW dedup + bucket CoW + atomic commit
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gamechanger_data_spark.functions.hashing import dedup_hash_expr
-from gamechanger_data_spark.functions.text import normalize_text_expr, normalize_text_udf
+from gamechanger_data_spark.functions.text import normalize_text_expr
 from gamechanger_data_spark.sinks.table import LakeTable
 from gamechanger_data_spark.sources.feed import list_ready_batches, read_batch
 
@@ -39,17 +39,15 @@ def _now_iso() -> str:
     return datetime.now(timezone.utc).replace(tzinfo=None).isoformat()
 
 
-def prepare_events(events: DataFrame, use_pandas_udf: bool = False) -> DataFrame:
-    """Vectorized normalization + content hash. ``use_pandas_udf`` switches
-    the text normalization from the native expression chain (JVM codegen —
-    the default hot path) to the Arrow pandas UDF with identical semantics."""
-    norm = normalize_text_udf(F.col("text")) if use_pandas_udf else normalize_text_expr("text")
-    return events.withColumn("text", norm).withColumn(
+def prepare_events(events: DataFrame) -> DataFrame:
+    """Vectorized normalization (the native expression chain, JVM
+    codegen) + content hash."""
+    return events.withColumn("text", normalize_text_expr("text")).withColumn(
         "dedup_hash", dedup_hash_expr(F.col("text"))
     )
 
 
-def finalize_winners(use_pandas_udf: bool = False):
+def finalize_winners():
     """Winner-only normalization + hashing for LakeTable.merge.
 
     Applied AFTER the LWW dedup: only rows that (a) came from this batch's
@@ -61,13 +59,11 @@ def finalize_winners(use_pandas_udf: bool = False):
     """
 
     def _t(df: DataFrame) -> DataFrame:
-        norm = (
-            normalize_text_udf(F.col("text"))
-            if use_pandas_udf
-            else normalize_text_expr("text")
-        )
         df = df.withColumn(
-            "text", F.when(F.col("__src"), norm).otherwise(F.col("text"))
+            "text",
+            F.when(F.col("__src"), normalize_text_expr("text")).otherwise(
+                F.col("text")
+            ),
         )
         return df.withColumn(
             "dedup_hash",
@@ -203,7 +199,6 @@ def apply_batch(
     table: LakeTable,
     events: DataFrame,
     batch_id: str,
-    use_pandas_udf: bool = False,
     with_lineage: bool = True,
     batch_dir: str | None = None,
 ) -> dict:
@@ -252,7 +247,7 @@ def apply_batch(
         batch_id,
         lineage_rows=lineage,
         touched=touched,
-        transform_winners=finalize_winners(use_pandas_udf=use_pandas_udf),
+        transform_winners=finalize_winners(),
         observe_ops=observe_ops,
         src_rows=src_rows,
     )
@@ -308,7 +303,6 @@ def replay_feed(
     feed_root: str,
     table: LakeTable,
     limit: int | None = None,
-    use_pandas_udf: bool = False,
     with_lineage: bool = True,
     compact_every: int | None = None,
     maintain_every: int | None = None,
@@ -352,8 +346,7 @@ def replay_feed(
             continue
         events = read_batch(spark, d)
         results.append(
-            apply_batch(table, events, batch_id,
-                        use_pandas_udf=use_pandas_udf, with_lineage=with_lineage,
+            apply_batch(table, events, batch_id, with_lineage=with_lineage,
                         batch_dir=d)
         )
         applied_count += 1
@@ -374,7 +367,6 @@ def stream_feed(
     table: LakeTable,
     checkpoint_dir: str,
     schema=None,  # kept for API compat; batch dirs carry their own schema
-    use_pandas_udf: bool = False,
     after_batch=None,
 ):
     """Structured Streaming variant: READY-MARKER stream -> foreachBatch.
@@ -409,8 +401,7 @@ def stream_feed(
             local = unquote(urlparse(p).path) if "://" in p or p.startswith("file:") else p
             d = os.path.dirname(local)
             batch_id = os.path.basename(d)[len(BATCH_PREFIX):]
-            res = apply_batch(table, read_batch(spark, d), batch_id,
-                              use_pandas_udf=use_pandas_udf, batch_dir=d)
+            res = apply_batch(table, read_batch(spark, d), batch_id, batch_dir=d)
             # same continuous-maintenance hook replay_feed offers, same
             # contract: NEWLY-applied batches only (an epoch can re-deliver
             # already-applied markers after checkpoint recreation or a

@@ -120,23 +120,6 @@ def test_snapshot_rollback(spark, feed_dir, tmp_path_factory):
     assert table.current_version() == v2
 
 
-def test_dedup_strategies_same_final_state(spark, feed_dir, tmp_path_factory):
-    """All three merge dedup strategies must produce identical final state."""
-    states = {}
-    for strat in ("window", "max_by", "salted"):
-        troot = str(tmp_path_factory.mktemp(f"table_{strat}"))
-        table = LakeTable(spark, troot, n_buckets=8, dedup_strategy=strat)
-        replay_feed(spark, feed_dir, table)
-        states[strat] = (
-            table.read()
-            .orderBy("conv_id", "turn_idx")
-            .toPandas()[PARITY]
-            .reset_index(drop=True)
-        )
-    pd.testing.assert_frame_equal(states["window"], states["max_by"])
-    pd.testing.assert_frame_equal(states["window"], states["salted"])
-
-
 def test_batch_missing_column_null_filled(spark, tmp_path):
     """A batch missing an existing column (upstream dropped it) must apply
     cleanly with nulls — the reverse direction of additive evolution."""

@@ -39,3 +39,20 @@ def test_strategies_identical(spark):
     c = lww_salted(df, salt_buckets=8).orderBy("conv_id", "turn_idx").toPandas()[cols]
     pd.testing.assert_frame_equal(a.reset_index(drop=True), b.reset_index(drop=True))
     pd.testing.assert_frame_equal(a.reset_index(drop=True), c.reset_index(drop=True))
+
+
+@pytest.mark.parametrize("strategy", [lww_window, lww_max_by, lww_salted])
+def test_strategy_matches_oracle_under_hot_key_skew(spark, strategy):
+    """One conversation owns ~60% of the events: every operator still
+    picks the oracle's winner for each key."""
+    from test_properties import hot_key_events
+
+    pdf = hot_key_events()
+    got = (
+        strategy(spark.createDataFrame(pdf))
+        .orderBy("conv_id", "turn_idx")
+        .toPandas()
+        .reset_index(drop=True)
+    )
+    cols = ["conv_id", "turn_idx", "ts", "event_seq", "text", "op", "role"]
+    pd.testing.assert_frame_equal(got[cols], _oracle(pdf)[cols], check_dtype=False)

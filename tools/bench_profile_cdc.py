@@ -7,7 +7,8 @@ Phases:
   footers     lineage_from_footers (pyarrow metadata)
   collects    DataFrame.collect calls inside merge (touched derivation etc.)
   write       the parquet write action (the merge computation itself)
-  snapfiles   _snap_bucket_files + _count_rows (driver footer IO)
+  snapfiles   _snap_bucket_files (the written-file listing in _write_buckets)
+  countrows   _count_rows (driver footer IO, in _write_buckets)
   stats       _stats_for_commit (zone-map derivation, driver footer IO)
   commit      _commit total (includes stats; lock + fsync + json)
   total       apply_batch wall
@@ -77,8 +78,7 @@ def main():
     )
     feed = os.path.join(workdir, "feed")
     write_feed(feed, spec, parts_per_batch=32)
-    table = LakeTable(spark, os.path.join(workdir, "table"), n_buckets=32,
-                      dedup_strategy=os.environ.get("GCSPARK_DEDUP", "window"))
+    table = LakeTable(spark, os.path.join(workdir, "table"), n_buckets=32)
 
     # --- instrument ---
     drv.lineage_from_footers = timed("footers", drv.lineage_from_footers)
