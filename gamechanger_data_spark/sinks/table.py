@@ -86,6 +86,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from gamechanger_data_spark.deltafiles import write_bucket_deltas
 from gamechanger_data_spark.functions.xxh64 import bucket_of, canon_type, key_kind
 from gamechanger_data_spark.operators.lww import lww_max_by, lww_window
 
@@ -110,6 +111,13 @@ STATS_SEGMENT_ROLL = 16
 FOLD_TARGET_PARTITION_BYTES = int(
     os.environ.get("SPARK_GRAFT_FOLD_PARTITION_BYTES", str(128 << 20))
 )
+# Batch bound of merge's Arrow route: a MOR-eligible batch whose footer
+# row count is at most this collects its LWW winners to the driver with
+# toArrow() and writes its delta files there with pyarrow (one Spark job
+# instead of five). Placed by an interleaved forced-MOR sweep of 2k-100k
+# event batches, Arrow route vs Spark write, with driver peak RSS.
+ARROW_COMMIT_MAX_ROWS = 50_000
+
 # bounded CAS-rebase attempts per commit and whole-op re-runs per merge;
 # exceeding either raises CommitConflictError to the caller (no partial
 # state — the orphaned data files are GC'd by expire_snapshots). Whole-op
@@ -1117,6 +1125,30 @@ class LakeTable:
         )
         files = self._snap_bucket_files(snap_dir, buckets)
         return files, {bk: self._count_rows(fl) for bk, fl in files.items()}
+
+    def _write_arrow_deltas(
+        self, winners, parent_version: int
+    ) -> tuple[dict[str, list[str]], dict[str, int]]:
+        """The Arrow route's MOR write: ``winners`` (a collected pyarrow
+        table in the state layout plus ``__bucket``) becomes one delta
+        file per bucket under a provisional dir, through the engine's one
+        delta writer. Same ``({bucket: [relpath]}, {bucket: rows})``
+        result as :meth:`_write_buckets`; row counts come from the table,
+        not from footers."""
+        staged = write_bucket_deltas(
+            self.root,
+            os.path.relpath(
+                self._provisional_snap_dir("delta", parent_version), self.root
+            ),
+            winners.drop_columns(["__bucket"]),
+            winners.column("__bucket"),
+            self.key_cols,
+            self.codec,
+        )
+        return (
+            {str(b): [rel] for b, rel, _ in staged},
+            {str(b): n for b, _, n in staged},
+        )
 
     def _successor(
         self, base: dict, kind: str, touched, written=None,
@@ -2969,7 +3001,9 @@ class LakeTable:
 
         ``touched`` (bucket ids the source touches) can be supplied by the
         caller when it already computed them in its lineage pass — saves a
-        scan; otherwise derived here with a column-pruned distinct.
+        scan; otherwise derived here: every bucket for a provably dense
+        batch, the Arrow route's collected ``__bucket`` column (below),
+        else a column-pruned distinct.
 
         ``transform_winners``: optional DataFrame->DataFrame applied AFTER
         the LWW dedup and before the write. Rows expose a boolean ``__src``
@@ -2995,6 +3029,21 @@ class LakeTable:
         base+delta with the same LWW kernel; cost ∝ batch, the round-1
         write-amplification killer for trickle feeds (reference semantics
         preserved: per-doc upsert, load/utils.py:223-278).
+
+        Arrow route (small MOR batches): when the table has a schema, the
+        mode is not ``cow`` (nor provably ``cow`` under ``auto``, see
+        :meth:`_auto_is_cow`), no touched set was supplied, the batch is
+        not dense, and ``0 < src_rows <= ARROW_COMMIT_MAX_ROWS``, that
+        batch-only winner plan runs ONCE and is collected with
+        ``toArrow()``. Its ``__bucket`` column is the touched set, so no
+        distinct job runs; on a ``mor`` decision each bucket's delta file
+        is written key-sorted with pyarrow on the driver
+        (``deltafiles.write_bucket_deltas``, the ``laketable`` sink's
+        writer too) and committed like any delta append — one Spark job
+        where the distinct and the partitionBy write ran five. A ``cow``
+        decision drops the collected table and runs the plan above.
+        Unknown ``src_rows``, dense batches and batches above the bound
+        keep the Spark write.
 
         Concurrency (optimistic, Iceberg-style): the data write runs
         lock-free; the commit is a CAS on the version pointer. If another
@@ -3117,6 +3166,32 @@ class LakeTable:
             .withColumn("__src", F.lit(True))
         )
 
+        def winners_of(merged_in: DataFrame) -> DataFrame:
+            # Two-exchange plan, deliberately: dedup exchanges on the KEY
+            # columns first, then the (much smaller) winner set
+            # re-exchanges by bucket for the write. A single
+            # bucket-clustered exchange looks cheaper on paper but loses
+            # Spark 4's PARTIAL WindowGroupLimit — with the key-hash
+            # exchange, each map task pre-reduces to its local top-1 per
+            # key BEFORE shuffling, collapsing shuffle bytes ~10x
+            # (measured: 1425 MB -> ~150 MB on a 21M-event batch) and
+            # moving the big sort to the pre-reduced map side. The second
+            # exchange only carries final winners.
+            merged = lww_window(merged_in, self.key_cols, self.order_cols)
+            # delete winners persist as tombstones (__deleted=true), hidden
+            # by read() but retained to defend the key; payload columns are
+            # kept only as debugging context.
+            merged = merged.withColumn(
+                "__deleted",
+                F.coalesce(F.col("op") == F.lit("delete"), F.lit(False)),
+            ).drop("op")
+            if transform_winners is not None:
+                merged = transform_winners(merged)
+            return merged.drop("__src")
+
+        chosen = self.merge_mode if mode is None else mode
+        # the Arrow route's collected batch winners (see ARROW_COMMIT_MAX_ROWS)
+        winners = None
         defer_mor = False
         if touched is None:
             # Provably-dense shortcut (guide §2.4 remove-passes): when the
@@ -3147,21 +3222,26 @@ class LakeTable:
             )
             if first_dense or (resident is not None and 0 < resident <= src_rows):
                 touched = list(range(self.n_buckets))
-            elif (self.merge_mode if mode is None else mode) == "mor" or (
-                (self.merge_mode if mode is None else mode) == "auto"
+            elif (
+                src_rows is not None
+                and 0 < src_rows <= ARROW_COMMIT_MAX_ROWS
                 and old_schema is not None
-                and self._mor_provable_untouched(m, src_rows)
+                and chosen != "cow"
+                and not (chosen == "auto" and self._auto_is_cow(m, src_rows))
             ):
-                # Merge-on-read never reads target buckets, so the touched
-                # set is not needed BEFORE the write — the delta write's
-                # partitionBy dirs reveal it for free afterwards (guide
-                # §2.4 remove-passes: drops the whole distinct-scan job,
-                # ~0.2-0.3 s of a trickle merge's fixed cost). Forced MOR
-                # always defers; AUTO defers only when the MOR decision is
-                # provable WITHOUT the touched set (see
-                # _mor_provable_untouched — decision-identical to the
-                # per-touched check by construction). CoW and unprovable
-                # auto still derive it up front.
+                # Arrow route: run the batch-only winner plan ONCE and
+                # collect it. Its __bucket column is the touched set (no
+                # distinct job), and on a MOR decision the delta files are
+                # written from it on the driver (no partitionBy write).
+                winners = winners_of(src_part).toArrow()
+                touched = sorted(winners.column("__bucket").unique().to_pylist())
+            elif chosen == "mor":
+                # Forced merge-on-read never reads target buckets, so the
+                # touched set is not needed BEFORE the write — the delta
+                # write's partitionBy dirs reveal it for free afterwards
+                # (drops the distinct-scan job: 0.88 vs 1.05 s median, 8/8
+                # interleaved pairs, on forced-MOR 2k-event merges of
+                # unknown size).
                 defer_mor = True
             else:
                 # Derived from the SCHEMA-ALIGNED source: xxhash64 is
@@ -3181,80 +3261,76 @@ class LakeTable:
             else self._decide_mode(m, old_schema, touched, src_rows, mode)
         )
 
-        if old_schema is not None and touched and write_mode == "cow":
-            # Target rows from ONLY the touched buckets become pseudo-events
-            # competing under the same (ts, event_seq) LWW order; their
-            # stored order cols defend them against older source events.
-            # Tombstones re-enter as op='delete' so a surviving tombstone
-            # stays a tombstone (a delete must keep defending its key
-            # against out-of-order older events in later batches).
-            # resolve=False: any outstanding delta rows join the union RAW —
-            # the single LWW pass below resolves base, deltas, and the new
-            # batch together (a CoW merge doubles as compaction of the
-            # buckets it touches).
-            target = self.read_buckets(
-                touched, version=m["version"], include_tombstones=True, resolve=False
-            )
-            tgt_part = (
-                self._align(target, state_schema)
-                .withColumn(
-                    "op",
-                    F.when(F.col("__deleted"), F.lit("delete")).otherwise(
-                        F.lit("update")
-                    ),
-                )
-                .withColumn(
-                    "__bucket", self._bucket_expr(schema=state_schema).cast("int")
-                )
-                .withColumn("__src", F.lit(False))
-            )
-            merged_in = tgt_part.unionByName(src_part)
+        if winners is not None and write_mode == "mor":
+            # 3a) Arrow route, MOR: one key-sorted delta file per touched
+            # bucket, written with pyarrow on the driver
+            written = self._write_arrow_deltas(winners, m["version"])
         else:
-            merged_in = src_part
+            # 3b) the Spark plan. A CoW decision drops the collected
+            # winners: the rewrite needs the touched buckets' target rows
+            # in the same LWW pass.
+            winners = None
+            if old_schema is not None and touched and write_mode == "cow":
+                # Target rows from ONLY the touched buckets become
+                # pseudo-events competing under the same (ts, event_seq)
+                # LWW order; their stored order cols defend them against
+                # older source events. Tombstones re-enter as op='delete'
+                # so a surviving tombstone stays a tombstone (a delete must
+                # keep defending its key against out-of-order older events
+                # in later batches). resolve=False: any outstanding delta
+                # rows join the union RAW — the single LWW pass resolves
+                # base, deltas, and the new batch together (a CoW merge
+                # doubles as compaction of the buckets it touches).
+                target = self.read_buckets(
+                    touched, version=m["version"], include_tombstones=True,
+                    resolve=False,
+                )
+                tgt_part = (
+                    self._align(target, state_schema)
+                    .withColumn(
+                        "op",
+                        F.when(F.col("__deleted"), F.lit("delete")).otherwise(
+                            F.lit("update")
+                        ),
+                    )
+                    .withColumn(
+                        "__bucket",
+                        self._bucket_expr(schema=state_schema).cast("int"),
+                    )
+                    .withColumn("__src", F.lit(False))
+                )
+                merged_in = tgt_part.unionByName(src_part)
+            else:
+                merged_in = src_part
+            merged = winners_of(merged_in)
 
-        # Two-exchange plan, deliberately: dedup exchanges on the KEY
-        # columns first, then the (much smaller) winner set re-exchanges by
-        # bucket for the write. A single bucket-clustered exchange looks
-        # cheaper on paper but loses Spark 4's PARTIAL WindowGroupLimit —
-        # with the key-hash exchange, each map task pre-reduces to its
-        # local top-1 per key BEFORE shuffling, collapsing shuffle bytes
-        # ~10x (measured: 1425 MB -> ~150 MB on a 21M-event batch) and
-        # moving the big sort to the pre-reduced map side. The second
-        # exchange only carries final winners.
-        merged = lww_window(merged_in, self.key_cols, self.order_cols)
-        # delete winners persist as tombstones (__deleted=true), hidden by
-        # read() but retained to defend the key; payload columns are kept
-        # only as debugging context.
-        merged = merged.withColumn(
-            "__deleted", F.coalesce(F.col("op") == F.lit("delete"), F.lit(False))
-        ).drop("op")
-        if transform_winners is not None:
-            merged = transform_winners(merged)
-        merged = merged.drop("__src")
-
-        # 3) write under a provisional snapshot dir: CoW rewrites the
-        # touched buckets' base files; MOR appends per-bucket delta files.
-        # CoW folds of large resident buckets autoscale their write
-        # parallelism (_fold_repartition); MOR delta appends carry only
-        # batch rows, so they keep the one-partition-per-bucket layout.
-        if write_mode == "cow":
-            npart, extra = self._fold_repartition(m, touched, max(1, len(touched)))
-        else:
-            npart = max(1, len(touched)) if touched is not None else self.n_buckets
-            extra = []
-        written = self._write_buckets(
-            self._fold_write(merged, npart, extra), m["version"], touched,
-            kind="snap" if write_mode == "cow" else "delta",
-        )
-        if touched is None:
-            # deferred-touched MOR: the write's partitionBy dirs ARE the
-            # touched set (a bucket with no winners wrote nothing and has
-            # nothing to register)
-            touched = sorted(int(bk) for bk in written[0])
+            # write under a provisional snapshot dir: CoW rewrites the
+            # touched buckets' base files; MOR appends per-bucket delta
+            # files. CoW folds of large resident buckets autoscale their
+            # write parallelism (_fold_repartition); MOR delta appends
+            # carry only batch rows, so they keep the
+            # one-partition-per-bucket layout.
+            if write_mode == "cow":
+                npart, extra = self._fold_repartition(
+                    m, touched, max(1, len(touched))
+                )
+            else:
+                npart = self.n_buckets if defer_mor else max(1, len(touched))
+                extra = []
+            written = self._write_buckets(
+                self._fold_write(merged, npart, extra), m["version"], touched,
+                kind="snap" if write_mode == "cow" else "delta",
+            )
+            if defer_mor:
+                # the write's partitionBy dirs ARE the touched set (a
+                # bucket with no winners wrote nothing and has nothing to
+                # register)
+                touched = sorted(int(bk) for bk in written[0])
 
         all_lineage = list(lineage_rows or [])
         if obs is not None:
-            # Observation metrics resolve after the write action above;
+            # Observation metrics resolve on the first action above (the
+            # Arrow route's toArrow, else the write);
             # recorded as a batch-level summary row in the same commit.
             got = obs.get
             all_lineage.append(
@@ -3335,45 +3411,23 @@ class LakeTable:
             expected, self.current_version(), "rebase attempts exhausted"
         )
 
-    def _mor_provable_untouched(self, m: dict, src_rows: int | None) -> bool:
-        """True when the AUTO CoW-vs-MOR decision is provably ``mor`` for
-        EVERY possible touched-bucket set — which lets the merge skip the
-        pre-write distinct scan that exists only to feed that decision.
-
-        Decision-equivalence argument (vs :meth:`_decide_mode` on the
-        actual touched set): (a) no bucket anywhere is at the delta cap ⇒
-        no touched bucket is; (b) every bucket has manifest row counts ⇒
-        no conservative-cow fallback can fire; (c) every bucket is
-        non-empty and ``src_rows < mor_fraction * min(bucket resident)``
-        ⇒ ``src_rows < mor_fraction * resident(touched)`` for any
-        non-empty touched set. Any batch this returns True for would have
-        been decided ``mor`` by the per-touched check too; when it
-        returns False the merge simply derives the set and decides as
-        before — behavior-identical, one job cheaper in the common
-        trickle case."""
-        if not src_rows:
-            # None is unknown; 0 keeps the empty-batch path (and its
-            # reported mode) exactly as before
-            return False
+    def _auto_is_cow(self, m: dict, src_rows: int) -> bool:
+        """True when the AUTO decision is ``cow`` for EVERY non-empty
+        touched set, so the Arrow route would collect winners only to
+        drop them: every bucket's delta stack is at ``mor_max_deltas``
+        (the fold cycle of a trickle feed), or the batch is at least
+        ``mor_fraction`` of the whole table's resident rows, hence of
+        any touched subset's."""
         deltas = m.get("deltas", {})
-        if any(len(fl) >= self.mor_max_deltas for fl in deltas.values()):
-            return False
-        br = m.get("base_rows", {})
-        dr = m.get("delta_rows", {})
-        residents = []
-        for b in range(self.n_buckets):
-            bk = str(b)
-            if bk not in br and m["files"].get(bk):
-                return False  # round-1 manifest without counts
-            r = br.get(bk, 0) + dr.get(bk, 0)
-            if r <= 0:
-                # an empty bucket could be touched; resident(touched)
-                # would then not be bounded below by min(residents)
-                return False
-            residents.append(r)
-        if not residents:
-            return False
-        return src_rows < self.mor_fraction * min(residents)
+        if all(
+            len(deltas.get(str(b), [])) >= self.mor_max_deltas
+            for b in range(self.n_buckets)
+        ):
+            return True
+        resident = sum(m.get("base_rows", {}).values()) + sum(
+            m.get("delta_rows", {}).values()
+        )
+        return src_rows >= self.mor_fraction * resident
 
     def _decide_mode(
         self,

@@ -39,14 +39,6 @@ def _now_iso() -> str:
     return datetime.now(timezone.utc).replace(tzinfo=None).isoformat()
 
 
-def prepare_events(events: DataFrame) -> DataFrame:
-    """Vectorized normalization (the native expression chain, JVM
-    codegen) + content hash."""
-    return events.withColumn("text", normalize_text_expr("text")).withColumn(
-        "dedup_hash", dedup_hash_expr(F.col("text"))
-    )
-
-
 def finalize_winners():
     """Winner-only normalization + hashing for LakeTable.merge.
 

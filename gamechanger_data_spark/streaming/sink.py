@@ -19,8 +19,10 @@ as :meth:`LakeTable.merge` sources — key + order + payload (+ optional
 happens at read/compaction exactly as for any other MOR delta, so
 out-of-order and duplicate events are safe.
 
-How it works without a SparkSession: executors stage per-bucket parquet
-via pyarrow (``write()`` in a Python data-source worker), with bucket
+How it works without a SparkSession: executors stage per-bucket,
+key-sorted parquet through the engine's one delta writer
+(``deltafiles.write_bucket_deltas``, shared with ``merge``'s Arrow route;
+``write()`` runs in a Python data-source worker), with bucket
 assignment done by the bit-parity Python twin of Spark's ``xxhash64``
 (functions/xxh64.py) so rows land exactly where the JVM hash would put
 them; the driver-side ``commit()`` then runs
@@ -56,6 +58,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from gamechanger_data_spark.deltafiles import write_bucket_deltas
 from gamechanger_data_spark.functions.xxh64 import bucket_of, key_kind
 
 META_DIR = "_meta"
@@ -133,7 +136,6 @@ class LakeSinkWriter(DataSourceStreamArrowWriter):
     def write(self, iterator) -> WriterCommitMessage:
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         batches = list(iterator)
         if not batches:
@@ -170,24 +172,15 @@ class LakeSinkWriter(DataSourceStreamArrowWriter):
         state = pa.Table.from_arrays(cols, schema=out_schema)
         # bucket assignment: the per-row Python xxh64 twin (trickle path)
         keys = [tbl.column(c).to_pylist() for c in self.key_cols]
-        buckets = [
-            bucket_of(vals, self.key_kinds, self.n_buckets)
-            for vals in zip(*keys)
-        ]
-        barr = pa.array(buckets, type=pa.int32())
-        stage = f"data/delta-sink-{uuid.uuid4().hex[:12]}"
-        staged = []
-        for b in sorted(set(buckets)):
-            mask = pc.equal(barr, b)
-            part = state.filter(mask)
-            rel = os.path.join(
-                stage, f"__bucket={b}",
-                f"part-{uuid.uuid4().hex[:12]}.parquet",
-            )
-            full = os.path.join(self.root, rel)
-            os.makedirs(os.path.dirname(full), exist_ok=True)
-            pq.write_table(part, full, compression=self.codec)
-            staged.append((b, rel, part.num_rows))
+        buckets = pa.array(
+            [bucket_of(vals, self.key_kinds, self.n_buckets)
+             for vals in zip(*keys)],
+            type=pa.int32(),
+        )
+        staged = write_bucket_deltas(
+            self.root, f"data/delta-sink-{uuid.uuid4().hex[:12]}", state,
+            buckets, self.key_cols, self.codec,
+        )
         return _StagedFiles(staged)
 
     # ---- driver side ----------------------------------------------------

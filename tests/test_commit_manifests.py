@@ -107,6 +107,12 @@ CASES = {
             _df(s, [(5, 30, "d5", "upsert"), (6, 30, "d6", "upsert")]),
             "c", mode="mor"),
         _buckets([5, 6]), "data", "merge", set(), False),
+    # the Arrow route: a known small batch, winners written with pyarrow
+    "merge_mor_arrow": (
+        lambda s, t: t.merge(
+            _df(s, [(5, 30, "d5", "upsert"), (6, 30, "d6", "upsert")]),
+            "c", mode="mor", src_rows=2),
+        _buckets([5, 6]), "data", "merge", set(), False),
     "append_deltas": (
         _append_copy, _first_base_bucket, "data", "merge", set(), True),
     "compact": (

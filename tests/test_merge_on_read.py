@@ -379,10 +379,12 @@ def test_maintain_compacts_deep_stacks_and_expires(spark, tmp_path):
 
 def test_forced_mor_deferred_touched_set(spark, tmp_path):
     """A forced-MOR merge with no caller-supplied touched set skips the
-    pre-write distinct scan and derives the touched buckets from the
-    delta write's partition dirs — the registered set must be exactly
-    the buckets that received winners, subset merges must leave other
-    buckets' delta stacks alone, and state must match the all-CoW twin."""
+    pre-write distinct scan: at unknown batch size it derives the touched
+    buckets from the delta write's partition dirs, at a known small size
+    (the Arrow route) from the collected winners' ``__bucket`` column.
+    Either way the registered set must be exactly the buckets that
+    received winners, subset merges must leave other buckets' delta
+    stacks alone, and state must match the all-CoW twin."""
     t = LakeTable(spark, str(tmp_path / "t"), n_buckets=4, merge_mode="cow")
     twin = LakeTable(spark, str(tmp_path / "twin"), n_buckets=4, merge_mode="cow")
     _apply(spark, t, 0)
@@ -391,20 +393,24 @@ def test_forced_mor_deferred_touched_set(spark, tmp_path):
     # a one-row batch touches a strict subset of buckets (keys include
     # turn_idx, so one row = one bucket)
     pdf = generate_batch(SPEC, 1)
-    one = pdf.head(1)
-    r = t.merge(spark.createDataFrame(one), "tiny", mode="mor")
-    assert r["mode"] == "mor" and not r["skipped"]
-    m = t._load_manifest()
-    with_deltas = sorted(int(b) for b, fl in m["deltas"].items() if fl)
-    assert with_deltas and len(with_deltas) < t.n_buckets
-    assert r["touched_buckets"] == len(with_deltas)
-    # untouched buckets registered no delta rows
-    for b in range(t.n_buckets):
-        if b not in with_deltas:
-            assert not m["deltas"].get(str(b))
+    for bid, one, src_rows in (("tiny", pdf.iloc[:1], None),
+                               ("tiny-arrow", pdf.iloc[1:2], 1)):
+        before = t._load_manifest()["deltas"]
+        r = t.merge(spark.createDataFrame(one), bid, mode="mor",
+                    src_rows=src_rows)
+        assert r["mode"] == "mor" and not r["skipped"]
+        m = t._load_manifest()
+        grew = sorted(int(b) for b, fl in m["deltas"].items()
+                      if len(fl) > len(before.get(b, [])))
+        assert grew and len(grew) < t.n_buckets
+        assert r["touched_buckets"] == len(grew)
+        # untouched buckets registered no delta rows
+        for b in range(t.n_buckets):
+            if b not in grew:
+                assert m["deltas"].get(str(b), []) == before.get(str(b), [])
+        twin.merge(spark.createDataFrame(one), bid, mode="cow")
 
     # state parity with the CoW twin applying the same rows
-    twin.merge(spark.createDataFrame(one), "tiny", mode="cow")
     got = t.read().orderBy("conv_id", "turn_idx").toPandas()
     want = twin.read().orderBy("conv_id", "turn_idx").toPandas()
     cols = ["conv_id", "turn_idx", "role", "text", "ts"]

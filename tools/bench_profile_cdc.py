@@ -2,6 +2,13 @@
 first). Monkeypatch-timed decomposition of apply_batch/merge — no engine
 changes. Prints one JSON line with per-batch phase seconds.
 
+It profiles the SPARK write only: its feed's batches are dense (each at
+least the table's resident rows), so every merge takes the dense shortcut
+and the partitionBy parquet write. Merge's Arrow route (small MOR
+batches: toArrow collect plus driver-side pyarrow delta files, see
+``ARROW_COMMIT_MAX_ROWS``) calls none of the write-side phases below;
+perfbench's trickle_serve ``merge_mor_s`` times that route.
+
 Phases:
   read        read_batch plan construction (lazy — near zero)
   footers     lineage_from_footers (pyarrow metadata)
