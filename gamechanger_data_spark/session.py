@@ -52,15 +52,14 @@ def get_spark(
         # part-files of a micro-batch into 1-2 splits, serializing the map
         # stage regardless of cores. 16m keeps map parallelism ≈ cores at
         # sandbox data sizes; on a real cluster raise it back via extra_conf.
-        .config("spark.sql.files.maxPartitionBytes", os.environ.get(
-            "SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     # Tungsten sort/aggregate buffers off-heap: the merge path's map stage
     # (wide-row sort + shuffle serialize) was measured ~30% JVM GC time
     # with on-heap buffers; off-heap moves that churn out of the collector
-    # (~10% wall on the CDC merge, interleaved A/B, tools/bench_profile_cdc).
+    # (~10% wall on the CDC merge, interleaved A/B in commit ab37f55).
     # Parameterized: size via SPARK_GRAFT_OFFHEAP (bytes-ish string, e.g.
     # "6g"; set empty to disable) — on a cluster, budget it INSIDE the
     # container's memoryOverhead headroom rather than this local default.

@@ -109,9 +109,7 @@ STATS_SEGMENT_ROLL = 16
 # CoW rewrites split buckets across shuffle partitions once the touched
 # resident bytes exceed this per default task (see _fold_repartition) —
 # tune down for memory-tight executors, up to favor fewer/larger files.
-FOLD_TARGET_PARTITION_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FOLD_PARTITION_BYTES", str(128 << 20))
-)
+FOLD_TARGET_PARTITION_BYTES = 128 << 20
 # Batch bound of merge's Arrow route: a MOR-eligible batch whose footer
 # row count is at most this collects its LWW winners to the driver with
 # toArrow() and writes its delta files there with pyarrow (one Spark job
@@ -302,6 +300,33 @@ def _stats_include(fstats: dict, preds, aliases) -> bool:
         if not ok:
             return False
     return True
+
+
+def _stat_nulls(fstats: dict, col: str, aliases):
+    """A file's recorded null count for ``col`` (rename aliases
+    honored), or None when unrecorded."""
+    nl = fstats.get("__nulls") or {}
+    for name in (col, *aliases.get(col, ())):
+        if name in nl:
+            return nl[name]
+    return None
+
+
+def _agg_exprs(normd) -> list:
+    """Spark aggregate columns for stats_agg's normalized
+    ``(fn, col, alias)`` list: ``count(*)``, ``count(col)``, ``min``,
+    ``max``."""
+    exprs = []
+    for fn, col, alias in normd:
+        if fn == "count" and col == "*":
+            exprs.append(F.count(F.lit(1)).alias(alias))
+        elif fn == "count":
+            exprs.append(F.count(F.col(col)).alias(alias))
+        elif fn == "min":
+            exprs.append(F.min(F.col(col)).alias(alias))
+        else:
+            exprs.append(F.max(F.col(col)).alias(alias))
+    return exprs
 
 
 _COND_CONJ = re.compile(
@@ -1244,17 +1269,22 @@ class LakeTable:
             return m.get("stats") or {}
         out: dict = {}
         for rel in segs:
-            cached = self._segstats_cache.get(rel)
-            if cached is None:
-                try:
-                    with open(os.path.join(self.root, rel)) as f:
-                        cached = json.load(f)
-                except (OSError, ValueError):
-                    cached = {}
-                self._segstats_cache[rel] = cached
-            out.update(cached)
+            out.update(self._read_statsseg(rel))
         out.update(m.get("stats") or {})
         return out
+
+    def _read_statsseg(self, rel: str) -> dict:
+        """One statsseg file's stats map, cached per relpath; a vanished
+        or unreadable segment reads as empty."""
+        cached = self._segstats_cache.get(rel)
+        if cached is None:
+            try:
+                with open(os.path.join(self.root, rel)) as f:
+                    cached = json.load(f)
+            except (OSError, ValueError):
+                cached = {}
+            self._segstats_cache[rel] = cached
+        return cached
 
     def _write_statsseg(self, payload: dict) -> str:
         rel = os.path.join(META_DIR, f"statsseg-{uuid.uuid4().hex}.json")
@@ -1314,15 +1344,7 @@ class LakeTable:
         if len(segs) > STATS_SEGMENT_ROLL:
             merged: dict = {}
             for rel in segs:
-                cached = self._segstats_cache.get(rel)
-                if cached is None:
-                    try:
-                        with open(os.path.join(self.root, rel)) as f:
-                            cached = json.load(f)
-                    except (OSError, ValueError):
-                        cached = {}
-                    self._segstats_cache[rel] = cached
-                merged.update(cached)
+                merged.update(self._read_statsseg(rel))
             merged = {p: v for p, v in merged.items() if p in cur_set}
             segs = [self._write_statsseg(merged)]
         manifest["stats"] = tail
@@ -2456,13 +2478,6 @@ class LakeTable:
                     return st[name]
             return None
 
-        def _nulls(st: dict, col: str):
-            nl = st.get("__nulls") or {}
-            for name in (col, *aliases.get(col, ())):
-                if name in nl:
-                    return nl[name]
-            return None
-
         if where is not None:
             return self._stats_agg_where(
                 m, schema, normd, list(where), out_schema,
@@ -2502,7 +2517,7 @@ class LakeTable:
                             ok = False
                             break
                         if fn == "count":
-                            if _nulls(st, col) is None:
+                            if _stat_nulls(st, col, aliases) is None:
                                 ok = False
                                 break
                         elif _entry(st, col) is None:
@@ -2526,7 +2541,7 @@ class LakeTable:
                     if fn == "count" and col == "*":
                         acc[alias] += st["__n"] - st["__nd"]
                     elif fn == "count":
-                        acc[alias] += st["__n"] - _nulls(st, col)
+                        acc[alias] += st["__n"] - _stat_nulls(st, col, aliases)
                     else:
                         lo, hi = _entry(st, col)
                         v = _dec_stat(
@@ -2544,17 +2559,7 @@ class LakeTable:
             df = self._read_resolved(
                 m, schema, [int(b) for b in scan_buckets], False
             )
-            exprs = []
-            for fn, col, alias in normd:
-                if fn == "count" and col == "*":
-                    exprs.append(F.count(F.lit(1)).alias(alias))
-                elif fn == "count":
-                    exprs.append(F.count(F.col(col)).alias(alias))
-                elif fn == "min":
-                    exprs.append(F.min(F.col(col)).alias(alias))
-                else:
-                    exprs.append(F.max(F.col(col)).alias(alias))
-            row = df.agg(*exprs).collect()[0]
+            row = df.agg(*_agg_exprs(normd)).collect()[0]
             for fn, col, alias in normd:
                 v = row[alias]
                 if fn == "count":
@@ -2594,13 +2599,6 @@ class LakeTable:
         only_counts = all(fn == "count" for fn, _, _ in normd)
         count_cols = [c for fn, c, _ in normd if fn == "count" and c != "*"]
 
-        def _nulls(st: dict, col: str):
-            nl = st.get("__nulls") or {}
-            for name in (col, *aliases.get(col, ())):
-                if name in nl:
-                    return nl[name]
-            return None
-
         all_buckets = sorted(set(files) | set(deltas), key=int)
         meta: dict[str, int] = {a: 0 for _, _, a in normd}
         files_meta = files_skipped = 0
@@ -2631,7 +2629,8 @@ class LakeTable:
                     servable = _stats_include(st, where, aliases)
                     if servable and count_cols:
                         servable = st["__nd"] == 0 and all(
-                            _nulls(st, c) is not None for c in count_cols
+                            _stat_nulls(st, c, aliases) is not None
+                            for c in count_cols
                         )
                     if servable:
                         for fn, col, alias in normd:
@@ -2639,7 +2638,7 @@ class LakeTable:
                                 b_meta_vals[alias] += st["__n"] - st["__nd"]
                             else:
                                 b_meta_vals[alias] += (
-                                    st["__n"] - _nulls(st, col)
+                                    st["__n"] - _stat_nulls(st, col, aliases)
                                 )
                         b_meta += 1
                     else:
@@ -2656,16 +2655,7 @@ class LakeTable:
 
         acc: dict[str, object] = {}
         bacc: dict[str, int] = {}
-        exprs = []
-        for fn, col, alias in normd:
-            if fn == "count" and col == "*":
-                exprs.append(F.count(F.lit(1)).alias(alias))
-            elif fn == "count":
-                exprs.append(F.count(F.col(col)).alias(alias))
-            elif fn == "min":
-                exprs.append(F.min(F.col(col)).alias(alias))
-            else:
-                exprs.append(F.max(F.col(col)).alias(alias))
+        exprs = _agg_exprs(normd)
         if scan_buckets:
             df = self._read_resolved(
                 m, schema, [int(b) for b in scan_buckets], False, where=where
@@ -2947,27 +2937,36 @@ class LakeTable:
         lookup back to ~one file per bucket, exactly as if the bucket
         were one file). Small merges keep the one-file-per-bucket layout
         unchanged. Measured: 2.5x on an all-bucket fold of a 1.6 GB
-        NB=4 table (tools/bench_fold_ab.py, interleaved A/B), with the
-        splitter-off control also prone to GCLocker stalls — the
-        fat-task memory-pressure mode this removes. Sizing is from
-        ON-DISK (compressed) bytes: highly-compressible columns
+        NB=4 table (interleaved A/B, BENCH/BASELINE.md "NB=4 causal
+        A/B"), with the splitter-off control also prone to GCLocker
+        stalls — the fat-task memory-pressure mode this removes. Sizing
+        is from ON-DISK (compressed) bytes: highly-compressible columns
         under-split, acceptable since the target is conservatively
         small. Returns (npart, extra_partition_cols)."""
+        nbytes = self._resident_bytes(m, buckets, exclude)
+        want = int(nbytes // FOLD_TARGET_PARTITION_BYTES)
+        if want > default:
+            return want, list(self.key_cols)
+        return default, []
+
+    def _resident_bytes(
+        self, m: dict, buckets, exclude: frozenset | None = None
+    ) -> int:
+        """On-disk bytes of the base and delta files of ``buckets`` (all
+        buckets when None), skipping files in ``exclude`` (file-scoped
+        DML leaves them unrewritten) and files that vanished."""
         nbytes = 0
         for src in (m.get("files", {}), m.get("deltas", {})):
             for bk, fl in src.items():
                 if buckets is None or int(bk) in buckets:
                     for p in fl:
                         if exclude and p in exclude:
-                            continue  # file-scoped DML: not rewritten
+                            continue
                         try:
                             nbytes += os.path.getsize(os.path.join(self.root, p))
                         except OSError:
                             pass
-        want = int(nbytes // FOLD_TARGET_PARTITION_BYTES)
-        if want > default:
-            return want, list(self.key_cols)
-        return default, []
+        return nbytes
 
     def _fold_write(self, df: DataFrame, npart: int, extra: list[str]):
         """Partition a CoW rewrite for its parquet write.
@@ -3746,15 +3745,7 @@ class LakeTable:
             m, schema, target, include_tombstones=True
         ).withColumn("__bucket", self._bucket_expr(schema=schema).cast("int"))
         tb = target_bytes or FOLD_TARGET_PARTITION_BYTES
-        nbytes = 0
-        for src in (m["files"], m.get("deltas", {})):
-            for bk, fl in src.items():
-                if int(bk) in target:
-                    for p in fl:
-                        try:
-                            nbytes += os.path.getsize(os.path.join(self.root, p))
-                        except OSError:
-                            pass
+        nbytes = self._resident_bytes(m, set(target))
         npart = max(len(target), int(nbytes // tb))
         if zorder:
             types = {f.name: f.dataType for f in schema.fields}
